@@ -9,9 +9,13 @@ import graft.table.SnapshotTable
 /** spark-submit entry point (north_rule: "run via spark-submit"): the batch
   * extraction job over a pages table. Usage:
   *
-  *   graft.Main extract <pagesParquet> <outputRoot> [partitions]
+  *   graft.Main extract <pagesParquet> <outputRoot> [partitions] [key=value...]
   *   graft.Main gen <rows> <pagesParquet>            # synthesize a corpus
   *   graft.Main sweep <outputRoot>                   # orphan GC
+  *
+  * and the other subcommands listed by `usage()`. `[partitions]` sizes only
+  * the giant-doc round-robin exchange (default: the default parallelism);
+  * the dedup exchange width is `spark.sql.shuffle.partitions`.
   *
   * Exit is non-zero on bad usage; extraction itself never fails on bad rows
   * (error-as-value). Local default master is for the sandbox; under real
@@ -203,6 +207,8 @@ object Main {
         |       graft.Main gen-warc <rows> <warcDir>
         |       graft.Main extract <pagesParquet> <outputRoot> [partitions] [key=value...]
         |       graft.Main extract-warc <warcDir> <outputRoot> [partitions] [key=value...]
+        |         partitions: width of the giant-doc round-robin exchange only; the
+        |                     dedup exchange width is spark.sql.shuffle.partitions
         |         options: conversion-format=text|spans
         |                  output-pdf-version=1|2|3   (attachment re-attach policy)
         |                  thumbnails=WxH

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -14,13 +16,13 @@ import graft.table.SnapshotTable
   * declarative plan:
   *
   * {{{
-  *   scan pages
-  *     -> giant/small split (broadcast semi/anti on the giant-url set)
-  *     -> per branch: narrow to (url, warc_ts, html)
-  *        -> [resume anti-join vs committed urls]
-  *        -> dedup latest per url (ONE payload shuffle; leaves data
-  *           hash-partitioned on url = the salted url-hash repartition)
-  *     -> giants additionally spread round-robin (~1% of bytes)
+  *   scan pages -> narrow to (url, warc_ts, html)
+  *     -> dedup latest per url: ONE payload shuffle (leaves data
+  *        hash-partitioned on url = the salted url-hash repartition), or
+  *        per scan task for url-bucketed input (assumeColocated)
+  *     -> [resume anti-join vs committed urls]
+  *     -> giant/small split on winner length; giants spread round-robin
+  *        (~1% of bytes; shuffle path only)
   *     -> mapPartitions(sniff -> route -> extract -> validate -> stamp)
   *     -> output + _counters + _lineage
   * }}}
@@ -59,18 +61,30 @@ import graft.table.SnapshotTable
 object ExtractPipeline {
 
   case class Config(
+      /** Width of the giant branch's round-robin exchange, and nothing
+        * else: the dedup exchange is a `groupBy`, so its width comes from
+        * `spark.sql.shuffle.partitions` (which AQE may coalesce), and the
+        * colocated path has no exchange at all. */
       partitions: Int = 32,
       giantThreshold: Int = 100 * 1024,
       inputSnapshotId: Long = 0L,
-      assumeUnique: Boolean = false,
-      splitGiants: Boolean = true,
       /** Input is bucketed by url-hash (CorpusWriter.writePagesBucketed /
-        * the production ingest layout): all versions of a url share a file,
-        * so dedup happens per-partition in the map — ZERO shuffles. The
-        * steady-state 100 TB configuration. Requires each bucket to fit in
-        * task memory for the winner map (buckets are sized at write time);
-        * giant-doc skew is bounded by the bucket layout, residual skew is
-        * handled by the per-doc work caps (HtmlParser.MaxNodes). */
+        * the production ingest layout), so dedup happens per partition in
+        * the map — ZERO shuffles. The contract is exact: every input file's
+        * rows are read by ONE task (all versions of a url share a file, and
+        * no file is split across read tasks). It is trusted, not checked:
+        * a split file yields one row per url per split. Each task's winner
+        * map must fit in task memory (buckets are sized at write time);
+        * residual skew is handled by the per-doc work caps
+        * (HtmlParser.MaxNodes).
+        *
+        * A guard that tests `_metadata.file_block_start == 0` alone is NOT
+        * the contract: parquet hands a row group to the split holding its
+        * midpoint, so a split file whose single row group lands in a later
+        * split is read whole by that later task — legal — yet that task's
+        * block starts past 0. `graft.Bench` reads 64 bucket files at
+        * `maxPartitionBytes=8m` and may produce exactly that layout
+        * (unverified) — check it before writing any guard. */
       assumeColocated: Boolean = false,
       /** Target PDF/A version: drives the attachment re-attach policy
         * (ops.Attachments, utils.py:464-507). "3" = keep all (default). */
@@ -115,136 +129,104 @@ object ExtractPipeline {
         struct(col("warc_ts"), tieHash(col("html")))).as("_w"))
       .select(col("url"), col("_w.warc_ts").as("warc_ts"), col("_w.html").as("html"))
 
-  /** The typed map stage. Never throws; bad rows become status rows. */
+  /** The one place a [[RawDoc]] becomes an [[ExtractedRow]]: per
+    * partition, a null html is the empty payload ('corrupted' status row,
+    * invariant 4), then sniff -> route -> extract -> validate, then stamp
+    * the partition id and input snapshot id. Never throws on bad input. */
+  private def extractPartition(inputSnapshotId: Long): Iterator[RawDoc] => Iterator[ExtractedRow] = { it =>
+    val pid = TaskContext.getPartitionId()
+    it.map { d =>
+      val e = Extractor.extract(d.url, if (d.html == null) Array.emptyByteArray else d.html)
+      ExtractedRow(e.url, d.warc_ts, e.status, e.mimeType, e.text, e.spans,
+        e.textBytes, e.message, e.heuristicsVersion, e.detectedKind,
+        e.pdfVersion, e.attachments, pid, inputSnapshotId)
+    }
+  }
+
+  /** The typed map stage over [[extractPartition]]. */
   def extractStage(docs: Dataset[RawDoc], cfg: Config): Dataset[ExtractedRow] = {
     import docs.sparkSession.implicits._
-    docs.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      it.map { d =>
-        val e = Extractor.extract(d.url, if (d.html == null) Array.emptyByteArray else d.html)
-        ExtractedRow(e.url, d.warc_ts, e.status, e.mimeType, e.text, e.spans,
-          e.textBytes, e.message, e.heuristicsVersion, e.detectedKind,
-          e.pdfVersion, e.attachments, pid, cfg.inputSnapshotId)
-      }
-    }
+    docs.mapPartitions(extractPartition(cfg.inputSnapshotId))
   }
 
-  /** Zero-shuffle path for url-bucketed input: last-write-wins dedup inside
-    * each partition (all versions of a url are co-located by the bucketed
-    * write), then extract in the same pass. */
-  private def extractColocated(pages: DataFrame, cfg: Config): Dataset[ExtractedRow] = {
-    import pages.sparkSession.implicits._
-    val narrow = pages.select(col("url"), col("warc_ts"), col("html"))
-    narrow.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      // winner per url within the bucket: (warc_ts, xxhash64(html)) desc —
-      // identical ordering to dedupLatest
-      val best = new java.util.HashMap[String, (java.sql.Timestamp, Long, Array[Byte])]()
-      it.foreach { row =>
-        val url = row.getString(0)
-        val ts = row.getTimestamp(1) // full microsecond precision
-        // null html -> empty payload ('corrupted' status row), matching the
-        // shuffle path's extract-stage normalization (invariant 4)
-        val html = {
-          val h0 = row.getAs[Array[Byte]](2)
-          if (h0 == null) Array.emptyByteArray else h0
-        }
-        // same tiebreak hash as the xxhash64(html) expression in dedupLatest
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-          html, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, html.length, 42L)
-        val prev = best.get(url)
-        val cmp = if (prev == null) 1 else ts.compareTo(prev._1)
-        if (prev == null || cmp > 0 || (cmp == 0 && h > prev._2))
-          best.put(url, (ts, h, html))
-      }
-      val iter = best.entrySet().iterator()
-      new Iterator[ExtractedRow] {
-        def hasNext: Boolean = iter.hasNext
-        def next(): ExtractedRow = {
-          val e0 = iter.next()
-          val e = Extractor.extract(e0.getKey, e0.getValue._3)
-          ExtractedRow(e.url, e0.getValue._1, e.status, e.mimeType, e.text,
-            e.spans, e.textBytes, e.message, e.heuristicsVersion,
-            e.detectedKind, e.pdfVersion, e.attachments, pid,
-            cfg.inputSnapshotId)
-        }
-      }
+  /** Last-write-wins inside one partition, for url-bucketed input where all
+    * versions of a url are co-located: the winner is the max of
+    * (warc_ts, tie hash), the same order as [[dedupLatest]]. */
+  private def latestPerUrl(it: Iterator[RawDoc]): Iterator[RawDoc] = {
+    val best = new java.util.HashMap[String, (RawDoc, Long)]()
+    it.foreach { d =>
+      // same tie hash as tieHash(html): null hashes as the empty payload
+      val html = if (d.html == null) Array.emptyByteArray else d.html
+      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+        html, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, html.length, 42L)
+      val prev = best.get(d.url)
+      val cmp = if (prev == null) 1 else d.warc_ts.compareTo(prev._1.warc_ts)
+      if (cmp > 0 || (cmp == 0 && h > prev._2)) best.put(d.url, (d, h))
     }
+    best.values().iterator().asScala.map(_._1)
   }
 
-  /** Build the extraction-input plan: dedup, (resume), split giants, place.
-    * `done` = committed urls for idempotent resume (None on first run).
+  /** Build the extraction input: one winner per url, minus the committed
+    * urls `done` (None on a first run), placed for the extract stage.
     *
-    * Giant handling (north_rule "explicit skew handling") is POST-dedup:
-    * the global winner set is computed once by the fused aggregate (the one
-    * payload shuffle), then split by winner length — the small branch keeps
-    * the aggregate's hash(url) partitioning untouched (filter preserves
-    * partitioning), the giant branch (~1% of rows) gets a dedicated
-    * round-robin exchange for one-giant-per-task placement. The two
-    * branches are a filter diamond over the SAME aggregate: Spark's
+    * Colocated input (`cfg.assumeColocated`) dedups inside each scan task
+    * with [[latestPerUrl]]; nothing moves unless the resume anti-join
+    * shuffles the winners (only when the committed side is too big to
+    * broadcast).
+    *
+    * Otherwise giant handling (north_rule "explicit skew handling") is
+    * POST-dedup: the global winner set is computed once by the fused
+    * aggregate (the one payload shuffle), then split by winner length — the
+    * small branch keeps the aggregate's hash(url) partitioning untouched
+    * (filter preserves partitioning), the giant branch (~1% of rows) gets a
+    * dedicated round-robin exchange for one-giant-per-task placement. The
+    * two branches are a filter diamond over the SAME aggregate: Spark's
     * ReuseExchange collapses their identical shuffle subtrees, so payload
     * bytes are scanned once and shuffle-WRITTEN once (the reduce side reads
-    * the shuffle twice — verified in PLANS.md). No url set is ever
+    * the shuffle twice — asserted in PipelineSpec). No url set is ever
     * collected or broadcast, so the plan survives 10^12 docs where the
     * round-1 giant-url broadcast (1% of urls >> broadcast limit) breaks. */
   private def planInput(pages: DataFrame, cfg: Config, done: Option[DataFrame]): Dataset[RawDoc] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    // input validation at the scan (uuid-check analog, utils.py:263-264):
-    // a null/empty url cannot be keyed, joined, or golden-compared
-    val narrow = pages
-      .where(col("url").isNotNull && length(col("url")) > 0)
-      .select(col("url"), col("warc_ts"), col("html"))
-
-    def minusDone(df: DataFrame): DataFrame = done match {
-      case Some(d) => df.join(d.select(col("url")).distinct(), Seq("url"), "left_anti")
-      case None => df
+    import pages.sparkSession.implicits._
+    val narrow = pages.where(validUrl).select(col("url"), col("warc_ts"), col("html"))
+    if (cfg.assumeColocated)
+      minusDone(narrow.as[RawDoc].mapPartitions(latestPerUrl).toDF(), done).as[RawDoc]
+    else {
+      val winners = minusDone(dedupNarrow(narrow), done)
+      // null html must land in the SMALL branch (length(null) is NULL and
+      // would fail BOTH predicates, silently dropping the row): the
+      // extract stage maps it to an empty payload -> 'corrupted' status
+      // row, preserving the error-as-value contract (invariant 4)
+      val htmlLen = coalesce(length(col("html")), lit(0))
+      val small = winners.where(htmlLen <= cfg.giantThreshold)
+      val giant = winners.where(htmlLen > cfg.giantThreshold)
+        .repartition(cfg.partitions)
+      small.unionByName(giant).as[RawDoc]
     }
-
-    val winners =
-      if (cfg.assumeUnique)
-        minusDone(narrow)
-          .repartition(cfg.partitions, pmod(xxhash64(col("url")), lit(cfg.partitions)))
-      else minusDone(dedupNarrow(narrow))
-
-    val placed =
-      if (!cfg.splitGiants) winners
-      else {
-        // null html must land in the SMALL branch (length(null) is NULL and
-        // would fail BOTH predicates, silently dropping the row): the
-        // extract stage maps it to an empty payload -> 'corrupted' status
-        // row, preserving the error-as-value contract (invariant 4)
-        val htmlLen = coalesce(length(col("html")), lit(0))
-        val small = winners.where(htmlLen <= cfg.giantThreshold)
-        val giant = winners.where(htmlLen > cfg.giantThreshold)
-          .repartition(cfg.partitions)
-        small.unionByName(giant)
-      }
-    placed.as[RawDoc]
   }
 
   /** Narrow emptiness probe for resume: reads ONLY the url column (parquet
     * column pruning), anti-joins committed urls, early-exits on the first
     * remaining row. Replaces the round-1 `todo.isEmpty`, which executed the
     * full payload shuffle once for the probe and again for the real run. */
-  private def hasWork(pages: DataFrame, done: Option[DataFrame]): Boolean = {
-    val urls = pages
-      .where(col("url").isNotNull && length(col("url")) > 0)
-      .select(col("url"))
-    val remaining = done match {
-      case Some(d) => urls.join(d.select(col("url")).distinct(), Seq("url"), "left_anti")
-      case None => urls
-    }
-    !remaining.isEmpty
-  }
+  private def hasWork(pages: DataFrame, done: Option[DataFrame]): Boolean =
+    !minusDone(pages.where(validUrl).select(col("url")), done).isEmpty
+
+  /** Input validation at the scan (uuid-check analog, utils.py:263-264): a
+    * null/empty url cannot be keyed, joined, or golden-compared. */
+  private def validUrl = col("url").isNotNull && length(col("url")) > 0
+
+  /** The rows of `df` whose url is not among the committed urls `done`. */
+  private def minusDone(df: DataFrame, done: Option[DataFrame]): DataFrame =
+    done.fold(df)(d => df.join(d.select(col("url")).distinct(), Seq("url"), "left_anti"))
+
+  /** The one planner behind [[run]] and [[runAndCommit]]. */
+  private def plan(pages: DataFrame, cfg: Config, done: Option[DataFrame]): Dataset[ExtractedRow] =
+    applyAttachmentPolicy(extractStage(planInput(pages, cfg, done), cfg), cfg)
 
   /** Full pipeline (no sink): pages DataFrame -> extracted Dataset. */
-  def run(pages: DataFrame, cfg: Config = Config()): Dataset[ExtractedRow] = {
-    val out =
-      if (cfg.assumeColocated) extractColocated(pages, cfg)
-      else extractStage(planInput(pages, cfg, None), cfg)
-    applyAttachmentPolicy(out, cfg)
-  }
+  def run(pages: DataFrame, cfg: Config = Config()): Dataset[ExtractedRow] =
+    plan(pages, cfg, None)
 
   /** Attachment re-attach policy as a nested codegen'd filter over the
     * attachments column (identity for the default "3" = keep-all). */
@@ -292,8 +274,7 @@ object ExtractPipeline {
       defaultForMissing = "spans")
     val done = table.read(spark).map(_.select(col("url")))
     if (!hasWork(pages, done)) return -1L
-    val extracted = applyAttachmentPolicy(
-        extractStage(planInput(pages, cfg, done), cfg), cfg)
+    val extracted = plan(pages, cfg, done)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val projected = cfg.conversionFormat match {

@@ -165,7 +165,6 @@ object StreamingExtract {
       cfg: ExtractPipeline.Config = ExtractPipeline.Config(),
       urlDedup: UrlDedup = UrlDedup.Global,
       watermark: String = "1 hour"): StreamingQuery = {
-    import spark.implicits._
     // near-dedup checkpoints default to the (shared-storage) output root,
     // exactly like Curate.run — never the driver-local fallback
     if (opts.nearDedup.isDefined && spark.sparkContext.getCheckpointDir.isEmpty)
@@ -238,15 +237,13 @@ object StreamingExtract {
           // the batch's duration so extraction runs once per row, not
           // twice; a micro-batch (maxFilesPerTrigger-bounded) is safe to
           // cache at any corpus scale
-          val extracted = ExtractPipeline.extractStage(
-            batch.select(col("url"), col("warc_ts"), col("html")).as[RawDoc],
-            cfg).toDF()
+          val rows = extracted(batch, cfg)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try writeAtomic(
-            graft.pipeline.Curate.curate(extracted, opts, benchGrams,
+            graft.pipeline.Curate.curate(rows, opts, benchGrams,
               priorDomainKept = prior),
             committed)
-          finally extracted.unpersist()
+          finally rows.unpersist()
         }
         // cumulative counts AFTER this batch, derived from the committed
         // output (so a crash between the two writes replays correctly:
@@ -337,19 +334,10 @@ object StreamingExtract {
       cfg: ExtractPipeline.Config = ExtractPipeline.Config(),
       window: String = "10 minutes",
       watermark: String = "1 hour"): DataFrame = {
-    val src = pagesStream(spark, inputDir)
-    import src.sparkSession.implicits._
     // keep warc_ts through extraction for event-time grouping; the single
     // watermark is declared on the post-extraction frame (redefining one
     // across a map boundary is disallowed)
-    val withTs = src.select(col("url"), col("warc_ts"), col("html"))
-    val ex = withTs.mapPartitions { it =>
-      it.map { r =>
-        val e = graft.extract.Extractor.extract(
-          r.getString(0), r.getAs[Array[Byte]](2))
-        (e.url, r.getTimestamp(1), e.status, e.textBytes)
-      }
-    }.toDF("url", "warc_ts", "status", "textBytes")
+    val ex = extracted(pagesStream(spark, inputDir), cfg)
     ex.withWatermark("warc_ts", watermark)
       .groupBy(org.apache.spark.sql.functions.window(col("warc_ts"), window), col("status"))
       .agg(count(lit(1)).as("docs"), sum(col("textBytes")).as("bytes"))

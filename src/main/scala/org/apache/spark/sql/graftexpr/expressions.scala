@@ -770,7 +770,8 @@ object PiiScan {
   * to equal keys by construction: tokens from `split(trim(text), " +")`
   * contain no spaces, so the joined window string is injective in the
   * token sequence. Cross-checked against the string-keyed HOF twin in
-  * OpsSpec. */
+  * OpsSpec. A null token element fails the task with an
+  * IllegalArgumentException (a null ARRAY is a null result). */
 case class WindowHashes(child: Expression, k: Int) extends UnaryExpression
     with ExpectsInputTypes {
   require(k >= 2, s"window must span at least 2 tokens: $k")
@@ -802,18 +803,14 @@ case class WindowHashes(child: Expression, k: Int) extends UnaryExpression
     val hb = new Array[Long](n)
     var i = 0
     while (i < n) {
-      // tokens from split() are never null; a null element deterministically
-      // folds the seed constants. NOTE this is NOT the same key the
-      // string-keyed twin derives (concat_ws DROPS nulls, xxhash64 skips
-      // them) — acceptable only because the path is unreachable from
-      // TextStats.tokens(); re-derive the parity argument before feeding
-      // any nullable token source here.
-      if (arr.isNullAt(i)) { ha(i) = 42L; hb(i) = 0x9e3779b9L }
-      else {
-        val s = arr.getUTF8String(i)
-        ha(i) = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), 42L)
-        hb(i) = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), 0x9e3779b9L)
-      }
+      // tokens from split() are never null. A null element has no key the
+      // string-keyed twin would agree on (concat_ws DROPS nulls), so it
+      // fails the task instead of hashing to a made-up window
+      if (arr.isNullAt(i)) throw new IllegalArgumentException(
+        s"window_hashes: null token at index $i; tokens must be non-null")
+      val s = arr.getUTF8String(i)
+      ha(i) = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), 42L)
+      hb(i) = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes(), 0x9e3779b9L)
       i += 1
     }
     val out = new Array[Any](nw)

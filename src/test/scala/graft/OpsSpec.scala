@@ -883,6 +883,23 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("native WindowHashes fails fast on a null token element") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.graftexpr.GraftExpr.window_hashes
+    val ok = Seq(Seq("a", "b", "c")).toDF("tk")
+    assert(ok.select(size(window_hashes(col("tk"), 2))).head().getInt(0) == 2)
+    val bad = Seq(Seq("a", null, "c")).toDF("tk")
+    // both the optimizer's constant fold of a local relation and the
+    // codegen'd evaluation over a shuffled one must refuse
+    for (df <- Seq(bad, bad.repartition(1))) {
+      val e = intercept[Exception](df.select(window_hashes(col("tk"), 2)).collect())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("null token at index 1")), e)
+    }
+  }
+
   test("r7: native excision == covered-set reference (d20), incl. overlaps") {
     val spark = TestSpark.spark
     import spark.implicits._

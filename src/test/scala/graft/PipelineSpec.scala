@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.CorpusWriter
 import graft.pipeline.ExtractPipeline
+import graft.table.SnapshotTable
 
 /** Partitioning-invariance + counters/lineage properties (SURVEY.md §5.2.3):
   * table CONTENT must be independent of partition count and placement —
@@ -69,6 +70,57 @@ class PipelineSpec extends AnyFunSuite {
       .select("url", "status", "textBytes", "text").collect()
     assert(key(colocated) == key(shuffled))
     assert(colocated.length == ExtractPipeline.dedupLatest(bucketed).count())
+  }
+
+  test("plan shape: payload shuffle written once; colocated plan has no exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    val spark = TestSpark.spark
+    val plans = new AdaptiveSparkPlanHelper {}
+    // un-bucketed input: the small/giant diamond shares ONE dedup exchange
+    val shuffled = ExtractPipeline.run(CorpusWriter.pagesDs(spark, 300L, partitions = 3),
+      ExtractPipeline.Config(partitions = 4))
+    shuffled.collect() // executes THIS query, so AQE finalizes its plan
+    val fin = shuffled.queryExecution.executedPlan
+    assert(plans.collect(fin) { case r: ReusedExchangeExec => r }.nonEmpty,
+      s"giant branch must reuse the dedup exchange:\n$fin")
+    // bucketed input on the colocated path: no exchange of any kind
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-shape").toString
+    CorpusWriter.writePagesBucketed(spark, 200L, dir, buckets = 4)
+    val colocated = ExtractPipeline.run(spark.read.parquet(dir),
+      ExtractPipeline.Config(assumeColocated = true))
+    colocated.collect()
+    val cfin = colocated.queryExecution.executedPlan
+    assert(plans.collect(cfin) { case e: Exchange => e }.isEmpty,
+      s"colocated path must not exchange:\n$cfin")
+  }
+
+  test("runAndCommit: colocated resume over growing bucketed input equals the shuffle path") {
+    val spark = TestSpark.spark
+    val tmp = java.nio.file.Files.createTempDirectory("graft-colocated-resume").toString
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("url", "status", "textBytes", "text").collect().map { r =>
+        (r.getString(0), r.getString(1), r.getLong(2),
+          java.util.Arrays.hashCode(r.getAs[Array[Byte]](3)))
+      }.toSet
+    val steps = Seq(150L, 300L).zipWithIndex.map { case (n, step) =>
+      val in = s"$tmp/in-$step"
+      CorpusWriter.writePagesBucketed(spark, n, in, buckets = 4)
+      val pages = spark.read.parquet(in)
+      val ids = (
+        ExtractPipeline.runAndCommit(spark, pages, s"$tmp/colocated",
+          ExtractPipeline.Config(assumeColocated = true)),
+        ExtractPipeline.runAndCommit(spark, pages, s"$tmp/shuffle",
+          ExtractPipeline.Config(partitions = 4)))
+      (ids, pages.select("url").distinct().count())
+    }
+    assert(steps.map(_._1) == Seq((0L, 0L), (1L, 1L)))
+    val Seq(firstUrls, allUrls) = steps.map(_._2)
+    // the second step resumed: it extracted only the urls the first lacked
+    assert(spark.read.parquet(s"$tmp/colocated/data/snap-1").count() == allUrls - firstUrls)
+    val colocated = rows(new SnapshotTable(s"$tmp/colocated").read(spark).get)
+    assert(colocated.size == allUrls)
+    assert(colocated == rows(new SnapshotTable(s"$tmp/shuffle").read(spark).get))
   }
 
   test("cross-tier dedup: a url with small AND giant versions keeps one global winner") {
