@@ -17,8 +17,6 @@ object TextNode {
 }
 final class Elem(val tag: String, val attrs: List[(String, String)]) extends Node {
   val children = new ArrayBuffer[Node](4)
-  def attr(name: String): Option[String] =
-    attrs.collectFirst { case (k, v) if k == name => v }
 }
 
 /** Streaming, never-throw HTML tokenizer + tree builder.

@@ -8,7 +8,7 @@ import graft.ops.{Dedup, TextStats, Urls}
 import graft.table.SnapshotTable
 
 /** Validated options for the curate job — the strict-options contract of
-  * the extract job (JobOptions): unknown keys, malformed values, repeated
+  * every job (JobOptions.split): unknown keys, malformed values, repeated
   * keys and out-of-range numbers are all hard errors BEFORE any scan. */
 case class CurateOptions(
     cap: Int = 1000,
@@ -29,107 +29,69 @@ object CurateOptions {
     "decontaminate", "holdout", "excise")
 
   /** Parse `key=value` args; Left(message) on ANY invalid input. */
-  def parse(args: Seq[String]): Either[String, CurateOptions] = {
-    val pairs = args.map { a =>
-      a.split("=", 2) match {
-        case Array(k, v) if Keys(k) => Right(k -> v)
-        case Array(k, _) =>
-          Left(s"unknown option '$k' (expected ${Keys.toSeq.sorted.map(_ + "=").mkString(", ")})")
-        case _ => Left(s"not a key=value option: '$a'")
-      }
-    }
-    pairs.collectFirst { case Left(m) => m } match {
-      case Some(m) => Left(m)
-      case None =>
-        val kvs = pairs.collect { case Right(kv) => kv }
-        // a repeated key must fail, not silently keep the last value
-        kvs.groupBy(_._1).collectFirst { case (k, vs) if vs.length > 1 => k } match {
-          case Some(k) => Left(s"option '$k' given more than once")
-          case None =>
-            val m = kvs.toMap
-            def intOpt(key: String, default: Int, min: Int): Either[String, Int] =
-              m.get(key) match {
-                case None => Right(default)
-                case Some(v) => v.toIntOption.filter(_ >= min)
-                  .toRight(s"$key must be an integer >= $min: '$v'")
-              }
-            def fracOpt(key: String): Either[String, Option[Double]] =
-              m.get(key) match {
-                case None => Right(None)
-                case Some(v) => v.toDoubleOption.filter(d => d >= 0.0 && d <= 1.0)
-                  .map(Some(_)).toRight(s"$key must be a fraction in [0,1]: '$v'")
-              }
-            for {
-              cap <- intOpt("cap", 1000, min = 1)
-              para <- intOpt("para-dedup", 0, min = 0) // 0 = stage disabled
-              // excise=K: exact-substring span excision at window size K;
-              // 0 = stage disabled, and a window must span >= 2 tokens
-              // (K=1 would excise every individually-repeated word)
-              excise <- intOpt("excise", 0, min = 0).flatMap {
-                case 1 => Left("excise window must be 0 (disabled) or >= 2 tokens")
-                case k => Right(k)
-              }
-              minQ <- fracOpt("min-quality")
-              maxDw <- fracOpt("max-dup-word")
-              maxTb <- fracOpt("max-top-bigram")
-              minTok <- (m.get("min-tokens") match {
-                case None => Right(None)
-                case Some(v) => v.toIntOption.filter(_ >= 1)
-                  .map(Some(_)).toRight(s"min-tokens must be an integer >= 1: '$v'")
-              }): Either[String, Option[Int]]
-              // threshold 0 would make EVERY doc pair a near-dup candidate
-              // (quadratic) — exclude it explicitly
-              nearD <- (m.get("near-dedup") match {
-                case None => Right(None)
-                case Some(v) => v.toDoubleOption.filter(d => d > 0.0 && d <= 1.0)
-                  .map(Some(_)).toRight(s"near-dedup must be a Jaccard threshold in (0,1]: '$v'")
-              }): Either[String, Option[Double]]
-              decon <- m.get("decontaminate") match {
-                // an EMPTY path (e.g. an unset shell variable) must fail,
-                // not silently disable the stage — the strict contract
-                case Some("") => Left("decontaminate must be a non-empty path")
-                case other => Right(other)
-              }
-              holdout <- (m.get("holdout") match {
-                case None => Right(None)
-                case Some(v) =>
-                  // "holdout=<testFrac>,<valFrac>" — two fractions whose
-                  // sum stays below 1 (the train share must be non-empty)
-                  val parts = v.split(",", -1).toSeq.map(_.toDoubleOption)
-                  parts match {
-                    case Seq(Some(t), Some(va))
-                        if t >= 0 && va >= 0 && t + va < 1 =>
-                      Right(Some((t, va)))
-                    case _ => Left("holdout must be '<testFrac>,<valFrac>' " +
-                      s"with nonnegative fractions summing below 1: '$v'")
-                  }
-              }): Either[String, Option[(Double, Double)]]
-              block <- (m.get("block") match {
-                case None => Right(Nil)
-                case Some(v) =>
-                  // same strict contract as decontaminate: an unset shell
-                  // variable ("block=") must not silently disable domain
-                  // blocking — a given key needs at least one real entry
-                  val entries = v.split(",").toSeq.filter(_.nonEmpty)
-                  if (entries.isEmpty)
-                    Left("block must list at least one domain (got an empty value)")
-                  else Right(entries)
-              }): Either[String, Seq[String]]
-            } yield CurateOptions(
-              cap = cap,
-              block = block,
-              paraMaxDocs = para,
-              minQuality = minQ,
-              maxDupWord = maxDw,
-              maxTopBigram = maxTb,
-              minTokens = minTok,
-              nearDedup = nearD,
-              decontaminatePath = decon,
-              holdout = holdout,
-              exciseWindow = excise)
+  def parse(args: Seq[String]): Either[String, CurateOptions] =
+    JobOptions.split(args, Keys).flatMap { m =>
+      def int(key: String, min: Int) =
+        JobOptions.value(m, key, s"an integer >= $min")(_.toIntOption.filter(_ >= min))
+      def frac(key: String) = JobOptions.value(m, key, "a fraction in [0,1]")(
+        _.toDoubleOption.filter(d => d >= 0.0 && d <= 1.0))
+      for {
+        cap <- int("cap", min = 1)
+        para <- int("para-dedup", min = 0) // 0 = stage disabled
+        // excise=K: exact-substring span excision at window size K;
+        // 0 = stage disabled, and a window must span >= 2 tokens
+        // (K=1 would excise every individually-repeated word)
+        excise <- int("excise", min = 0).flatMap {
+          case Some(1) => Left("excise window must be 0 (disabled) or >= 2 tokens")
+          case k => Right(k)
         }
+        minQ <- frac("min-quality")
+        maxDw <- frac("max-dup-word")
+        maxTb <- frac("max-top-bigram")
+        minTok <- int("min-tokens", min = 1)
+        // threshold 0 would make EVERY doc pair a near-dup candidate
+        // (quadratic) — exclude it explicitly
+        nearD <- JobOptions.value(m, "near-dedup", "a Jaccard threshold in (0,1]")(
+          _.toDoubleOption.filter(d => d > 0.0 && d <= 1.0))
+        decon <- m.get("decontaminate") match {
+          // an EMPTY path (e.g. an unset shell variable) must fail,
+          // not silently disable the stage — the strict contract
+          case Some("") => Left("decontaminate must be a non-empty path")
+          case other => Right(other)
+        }
+        // "holdout=<testFrac>,<valFrac>" — two fractions whose sum
+        // stays below 1 (the train share must be non-empty)
+        holdout <- JobOptions.value(m, "holdout",
+            "'<testFrac>,<valFrac>' with nonnegative fractions summing below 1") {
+          _.split(",", -1).toSeq.map(_.toDoubleOption) match {
+            case Seq(Some(t), Some(va)) if t >= 0 && va >= 0 && t + va < 1 => Some((t, va))
+            case _ => None
+          }
+        }
+        block <- (m.get("block") match {
+          case None => Right(Nil)
+          case Some(v) =>
+            // same strict contract as decontaminate: an unset shell
+            // variable ("block=") must not silently disable domain
+            // blocking — a given key needs at least one real entry
+            val entries = v.split(",").toSeq.filter(_.nonEmpty)
+            if (entries.isEmpty)
+              Left("block must list at least one domain (got an empty value)")
+            else Right(entries)
+        }): Either[String, Seq[String]]
+      } yield CurateOptions(
+        cap = cap.getOrElse(1000),
+        block = block,
+        paraMaxDocs = para.getOrElse(0),
+        minQuality = minQ,
+        maxDupWord = maxDw,
+        maxTopBigram = maxTb,
+        minTokens = minTok,
+        nearDedup = nearD,
+        decontaminatePath = decon,
+        holdout = holdout,
+        exciseWindow = excise.getOrElse(0))
     }
-  }
 }
 
 /** Per-stage row counters, observed DURING the one write pass (CollectMetrics

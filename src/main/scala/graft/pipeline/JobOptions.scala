@@ -1,84 +1,94 @@
 package graft.pipeline
 
 /** Job-level option validation — the Spark re-expression of the reference's
-  * set_options request-validation matrix (docsbox/docs/utils.py:45-96):
-  * per-type-family allowed conversion formats, `output-pdf-version` in
-  * {1,2,3}, thumbnails size as "WxH". Invalid input is rejected up front
-  * with a message (the 400-response analog) — a bad option must fail the
-  * job BEFORE a 100 TB scan starts, not per row. */
+  * set_options request-validation matrix (docsbox/docs/utils.py:45-96).
+  * Invalid input is rejected up front with a message (the 400-response
+  * analog) — a bad option must fail the job BEFORE a 100 TB scan starts,
+  * not per row.
+  *
+  * [[split]] is the one `key=value` contract every `graft.Main` job goes
+  * through (extract here, curate/stream-curate via CurateOptions, mix via
+  * MixOptions); each job then checks its own values. */
 object JobOptions {
 
-  /** Validated job options. `outputPdfVersion` drives the attachment
-    * re-attach policy (ops.Attachments.applyPolicy); `conversionFormat`
-    * the committed projection ("spans" = full rows, "text" = text-only). */
-  final case class Options(
-      conversionFormat: String = "spans",
-      outputPdfVersion: String = "3",
-      thumbnails: Option[(Int, Int)] = None)
-
-  /** Allowed target formats per detected type family — the
-    * CONVERTABLE_MIMETYPES["formats"] analog (config/config.yml:34-153).
-    * Every family can emit plain text; span-preserving output exists for
-    * families with structural spans. Only formats the pipeline actually
-    * implements are listed — validation accepting an unimplemented format
-    * would poison the snapshot chain's meta for no behavior. */
-  val FormatsByKind: Map[String, Set[String]] = Map(
-    "html" -> Set("text", "spans"),
-    "pdf" -> Set("text", "spans"),
-    "ooxml" -> Set("text", "spans"),
-    "odf" -> Set("text", "spans"), // whole family: odt/ods/odp/odg + sx*
-    "rtf" -> Set("text", "spans"),
-    "text" -> Set("text"))
-
-  private val KnownKeys =
-    Set("conversion-format", "output-pdf-version", "thumbnails")
-
-  /** Validate `key=value` options. Left(message) on the FIRST violation —
-    * mirrors set_options raising ValueError. */
-  def validate(kv: Map[String, String]): Either[String, Options] = {
-    val unknown = kv.keySet -- KnownKeys
-    if (unknown.nonEmpty)
-      return Left(s"unknown option(s): ${unknown.toSeq.sorted.mkString(", ")}")
-
-    var opts = Options()
-
-    kv.get("conversion-format").foreach { f =>
-      val allowedSomewhere = FormatsByKind.values.exists(_.contains(f))
-      if (!allowedSomewhere)
-        return Left(s"'$f' is not a supported conversion format " +
-          s"(allowed: ${FormatsByKind.values.flatten.toSeq.distinct.sorted.mkString(", ")})")
-      opts = opts.copy(conversionFormat = f)
-    }
-
-    kv.get("output-pdf-version").foreach { v =>
-      if (!Set("1", "2", "3").contains(v))
-        return Left("Invalid 'output_pdf_version' value. Allowed are 1, 2 and 3")
-      opts = opts.copy(outputPdfVersion = v)
-    }
-
-    kv.get("thumbnails").foreach { t =>
-      t.split("x", -1) match {
-        case Array(w, h) =>
-          val (wi, hi) =
-            try (w.trim.toInt, h.trim.toInt)
-            catch { case _: NumberFormatException => return Left("Invalid 'size' value") }
-          if (wi <= 0 || hi <= 0) return Left("Invalid 'size' value")
-          opts = opts.copy(thumbnails = Some((wi, hi)))
-        case _ => return Left("Invalid 'size' value")
+  /** Split `key=value` args into a map over the allowed `keys`.
+    * Left(message) on the FIRST arg that is not `key=value`, names an
+    * unknown key, or repeats a key (a repeat must fail, not silently keep
+    * the last value). */
+  def split(args: Seq[String], keys: Set[String]): Either[String, Map[String, String]] =
+    args.foldLeft[Either[String, Map[String, String]]](Right(Map.empty)) { (acc, a) =>
+      acc.flatMap { kv =>
+        a.split("=", 2) match {
+          case Array(k, _) if !keys(k) =>
+            Left(s"unknown option '$k' (expected ${keys.toSeq.sorted.map(_ + "=").mkString(", ")})")
+          case Array(k, _) if kv.contains(k) => Left(s"option '$k' given more than once")
+          case Array(k, v) => Right(kv + (k -> v))
+          case _ => Left(s"not a key=value option: '$a'")
+        }
       }
     }
 
-    Right(opts)
-  }
-
-  /** Parse trailing `key=value` CLI args into the validated options. */
-  def parseArgs(args: Seq[String]): Either[String, Options] = {
-    val kv = Map.newBuilder[String, String]
-    args.foreach { a =>
-      val eq = a.indexOf('=')
-      if (eq <= 0) return Left(s"malformed option '$a' (expected key=value)")
-      kv += a.substring(0, eq) -> a.substring(eq + 1)
+  /** The value of `key` in a [[split]] map, parsed by `parse`; a value
+    * that `parse` rejects is Left("<key> must be <rule>: '<value>'"). */
+  def value[A](kv: Map[String, String], key: String, rule: String)(
+      parse: String => Option[A]): Either[String, Option[A]] =
+    kv.get(key).fold[Either[String, Option[A]]](Right(None)) { v =>
+      parse(v).map(Some(_)).toRight(s"$key must be $rule: '$v'")
     }
-    validate(kv.result())
+
+  /** The conversion formats the pipeline implements — the
+    * CONVERTABLE_MIMETYPES["formats"] analog (config/config.yml:34-153).
+    * "spans" = full rows; "text" = text-only projection. Accepting an
+    * unimplemented format would poison the snapshot chain's meta for no
+    * behavior. */
+  val ConversionFormats: Set[String] = Set("spans", "text")
+
+  private val ExtractKeys =
+    Set("conversion-format", "output-pdf-version", "thumbnails")
+
+  /** Parse the extract job's trailing args `[partitions] [key=value...]`
+    * into its Config. `partitions` is at most one positional, a positive
+    * integer; when absent, `defaultPartitions` is evaluated, and only
+    * after every other check passed. Options: `conversion-format`
+    * (see [[ConversionFormats]]), `output-pdf-version` in {1,2,3} (the
+    * attachment re-attach policy), `thumbnails=WxH` with positive ints.
+    * Left(message) on the first violation — mirrors set_options raising
+    * ValueError. */
+  def parseExtract(args: Seq[String],
+      defaultPartitions: => Int): Either[String, ExtractPipeline.Config] = {
+    val (positional, options) = args.partition(!_.contains('='))
+    for {
+      kv <- split(options, ExtractKeys)
+      partitions <- positional match {
+        case Seq() => Right(None)
+        case Seq(p) => p.toIntOption.filter(_ > 0).map(Some(_))
+          .toRight(s"partitions must be a positive integer: '$p'")
+        case ps => Left(s"at most one [partitions] argument, got: ${ps.mkString(" ")}")
+      }
+      format <- kv.get("conversion-format") match {
+        case Some(f) if !ConversionFormats(f) =>
+          Left(s"'$f' is not a supported conversion format " +
+            s"(allowed: ${ConversionFormats.toSeq.sorted.mkString(", ")})")
+        case f => Right(f)
+      }
+      pdfVersion <- kv.get("output-pdf-version") match {
+        case Some(v) if !Set("1", "2", "3")(v) =>
+          Left("Invalid 'output_pdf_version' value. Allowed are 1, 2 and 3")
+        case v => Right(v)
+      }
+      thumbnails <- kv.get("thumbnails") match {
+        case None => Right(None)
+        case Some(t) => t.split("x", -1).map(_.trim.toIntOption) match {
+          case Array(Some(w), Some(h)) if w > 0 && h > 0 => Right(Some((w, h)))
+          case _ => Left("Invalid 'size' value")
+        }
+      }
+    } yield {
+      val d = ExtractPipeline.Config()
+      d.copy(partitions = partitions.getOrElse(defaultPartitions),
+        conversionFormat = format.getOrElse(d.conversionFormat),
+        outputPdfVersion = pdfVersion.getOrElse(d.outputPdfVersion),
+        thumbnails = thumbnails)
+    }
   }
 }

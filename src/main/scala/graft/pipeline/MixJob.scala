@@ -21,67 +21,46 @@ object MixOptions {
 
   /** Parse `key=value` args; Left(message) on ANY invalid input.
     * `sample=en:0.5,de:0.25[,default:0.1]` / `budget=<tokensPerLang>`. */
-  def parse(args: Seq[String]): Either[String, MixOptions] = {
-    val pairs = args.map { a =>
-      a.split("=", 2) match {
-        case Array(k, v) if Keys(k) => Right(k -> v)
-        case Array(k, _) =>
-          Left(s"unknown option '$k' (expected ${Keys.toSeq.sorted.map(_ + "=").mkString(", ")})")
-        case _ => Left(s"not a key=value option: '$a'")
-      }
-    }
-    pairs.collectFirst { case Left(m) => m } match {
-      case Some(m) => Left(m)
-      case None =>
-        val kvs = pairs.collect { case Right(kv) => kv }
-        kvs.groupBy(_._1).collectFirst { case (k, vs) if vs.length > 1 => k } match {
-          case Some(k) => Left(s"option '$k' given more than once")
-          case None =>
-            val m = kvs.toMap
-            for {
-              parsed <- m.get("sample") match {
-                case None => Right((Map.empty[String, Double], 1.0))
-                case Some(v) =>
-                  val entries = v.split(",", -1).toSeq.map { e =>
-                    e.split(":", 2) match {
-                      case Array(g, f) if g.nonEmpty =>
-                        f.toDoubleOption.filter(d => d >= 0.0 && d <= 1.0)
-                          .map(g -> _)
-                          .toRight(s"sample fraction for '$g' must be in [0,1]: '$f'")
-                      case _ => Left(s"sample entries are '<group>:<frac>': '$e'")
-                    }
-                  }
-                  entries.collectFirst { case Left(msg) => msg }
-                    .toLeft(entries.collect { case Right(kv) => kv })
-                    .flatMap { es =>
-                      es.groupBy(_._1).collectFirst {
-                        case (g, vs) if vs.length > 1 => g
-                      } match {
-                        case Some(g) => Left(s"sample group '$g' given more than once")
-                        case None =>
-                          val all = es.toMap
-                          Right((all - "default",
-                            all.getOrElse("default", 1.0)))
-                      }
-                    }
+  def parse(args: Seq[String]): Either[String, MixOptions] =
+    JobOptions.split(args, Keys).flatMap { m =>
+      for {
+        parsed <- m.get("sample") match {
+          case None => Right((Map.empty[String, Double], 1.0))
+          case Some(v) =>
+            val entries = v.split(",", -1).toSeq.map { e =>
+              e.split(":", 2) match {
+                case Array(g, f) if g.nonEmpty =>
+                  f.toDoubleOption.filter(d => d >= 0.0 && d <= 1.0)
+                    .map(g -> _)
+                    .toRight(s"sample fraction for '$g' must be in [0,1]: '$f'")
+                case _ => Left(s"sample entries are '<group>:<frac>': '$e'")
               }
-              budget <- (m.get("budget") match {
-                case None => Right(None)
-                case Some(v) => v.toLongOption.filter(_ >= 1L)
-                  .map(Some(_))
-                  .toRight(s"budget must be an integer >= 1: '$v'")
-              }): Either[String, Option[Long]]
-              _ <- {
-                val (fr, dflt) = parsed
-                if (fr.isEmpty && dflt >= 1.0 && budget.isEmpty)
-                  Left("mix needs sample= and/or budget= (a no-op mix is 'compact')")
-                else Right(())
+            }
+            entries.collectFirst { case Left(msg) => msg }
+              .toLeft(entries.collect { case Right(kv) => kv })
+              .flatMap { es =>
+                es.groupBy(_._1).collectFirst {
+                  case (g, vs) if vs.length > 1 => g
+                } match {
+                  case Some(g) => Left(s"sample group '$g' given more than once")
+                  case None =>
+                    val all = es.toMap
+                    Right((all - "default",
+                      all.getOrElse("default", 1.0)))
+                }
               }
-            } yield MixOptions(
-              sample = parsed._1, sampleDefault = parsed._2, budget = budget)
         }
+        budget <- JobOptions.value(m, "budget", "an integer >= 1")(
+          _.toLongOption.filter(_ >= 1L))
+        _ <- {
+          val (fr, dflt) = parsed
+          if (fr.isEmpty && dflt >= 1.0 && budget.isEmpty)
+            Left("mix needs sample= and/or budget= (a no-op mix is 'compact')")
+          else Right(())
+        }
+      } yield MixOptions(
+        sample = parsed._1, sampleDefault = parsed._2, budget = budget)
     }
-  }
 }
 
 /** Training-mix assembly over the CURATED snapshot — the step after

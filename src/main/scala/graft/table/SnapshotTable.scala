@@ -4,6 +4,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Iceberg-style snapshot layer over Parquet (no Iceberg runtime offline —
@@ -48,32 +51,23 @@ final class SnapshotTable(val root: String) {
 
   private def writeManifest(m: Manifest): Unit = {
     Files.createDirectories(manifestPath(m.id).getParent)
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val metaJson = m.meta.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}")
-    val json =
-      s"""{"id": ${m.id}, "parentId": ${m.parentId}, "rowCount": ${m.rowCount},
-         | "files": [${m.files.sorted.map(q).mkString(", ")}],
-         | "meta": $metaJson}""".stripMargin
+    val json = SnapshotTable.Json.createObjectNode()
+      .put("id", m.id).put("parentId", m.parentId).put("rowCount", m.rowCount)
+    val files = json.putArray("files")
+    m.files.sorted.foreach(f => files.add(f))
+    val meta = json.putObject("meta")
+    m.meta.toSeq.sortBy(_._1).foreach { case (k, v) => meta.put(k, v) }
     val tmp = manifestPath(m.id).resolveSibling(s".tmp-snap-${m.id}.json")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, SnapshotTable.Json.writerWithDefaultPrettyPrinter().writeValueAsBytes(json))
     Files.move(tmp, manifestPath(m.id), StandardCopyOption.ATOMIC_MOVE)
   }
 
   def readManifest(id: Long): Manifest = {
-    val json = new String(Files.readAllBytes(manifestPath(id)), StandardCharsets.UTF_8)
-    def longField(name: String): Long = {
-      val m = ("\"" + name + "\":\\s*(-?\\d+)").r.findFirstMatchIn(json)
-      m.map(_.group(1).toLong).getOrElse(-1L)
-    }
-    val files = "\"files\":\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("")
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-    val meta = "\"meta\":\\s*\\{([^}]*)\\}".r.findFirstMatchIn(json)
-      .map(_.group(1)).map { body =>
-        "\"([^\"]+)\":\\s*\"([^\"]*)\"".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2)).toMap
-      }.getOrElse(Map.empty[String, String])
+    val json = SnapshotTable.Json.readTree(Files.readAllBytes(manifestPath(id)))
+    def longField(name: String): Long = json.path(name).asLong(-1L)
+    val files = json.path("files").elements().asScala.map(_.asText).toSeq
+    val meta = json.path("meta").properties().asScala
+      .map(e => e.getKey -> e.getValue.asText).toMap
     Manifest(longField("id"), longField("parentId"), files, longField("rowCount"), meta)
   }
 
@@ -203,4 +197,12 @@ final class SnapshotTable(val root: String) {
       listDir(p).foreach(deleteRecursively)
     Files.deleteIfExists(p)
   }
+}
+
+object SnapshotTable {
+
+  /** Manifest JSON codec (Spark's jackson-databind). Reads also accept the
+    * raw newlines the earlier hand-rolled writer left in meta values. */
+  private val Json = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
 }

@@ -2,15 +2,19 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.pipeline.ExtractPipeline.Config
 import graft.pipeline.JobOptions
 
 /** Option-validation matrix (set_options analog, utils.py:45-96): the
   * expectation-table-as-code for every accept/reject rule. */
 class JobOptionsSpec extends AnyFunSuite {
 
+  /** The extract job's trailing args, with a default partition count of 7. */
+  private def parse(args: String*) = JobOptions.parseExtract(args, defaultPartitions = 7)
+
   test("defaults: empty options validate to spans/v3/no thumbnails") {
-    assert(JobOptions.validate(Map.empty) ==
-      Right(JobOptions.Options("spans", "3", None)))
+    assert(parse() == Right(Config(partitions = 7, conversionFormat = "spans",
+      outputPdfVersion = "3", thumbnails = None)))
   }
 
   test("conversion-format=text commits a text-only projection") {
@@ -34,41 +38,82 @@ class JobOptionsSpec extends AnyFunSuite {
   }
 
   test("conversion-format: implemented formats only, rejected otherwise") {
-    assert(JobOptions.validate(Map("conversion-format" -> "spans")).isRight)
-    assert(JobOptions.validate(Map("conversion-format" -> "text")).isRight)
+    assert(parse("conversion-format=spans").isRight)
+    assert(parse("conversion-format=text") ==
+      Right(Config(partitions = 7, conversionFormat = "text")))
     // unimplemented/unknown formats are rejected up front (accepting a
     // format the pipeline cannot produce would poison the chain meta)
     Seq("pdfa", "docx", "").foreach { f =>
-      val bad = JobOptions.validate(Map("conversion-format" -> f))
+      val bad = parse(s"conversion-format=$f")
       assert(bad.isLeft && bad.swap.exists(_.contains("not a supported conversion format")), f)
     }
   }
 
   test("output-pdf-version: 1|2|3 only (the reference's exact rule)") {
     Seq("1", "2", "3").foreach { v =>
-      assert(JobOptions.validate(Map("output-pdf-version" -> v)) ==
-        Right(JobOptions.Options(outputPdfVersion = v)))
+      assert(parse(s"output-pdf-version=$v") ==
+        Right(Config(partitions = 7, outputPdfVersion = v)))
     }
     Seq("0", "4", "2.0", "", "two").foreach { v =>
-      assert(JobOptions.validate(Map("output-pdf-version" -> v)) ==
+      assert(parse(s"output-pdf-version=$v") ==
         Left("Invalid 'output_pdf_version' value. Allowed are 1, 2 and 3"), v)
     }
   }
 
   test("thumbnails: WxH with positive ints; everything else is a 400") {
-    assert(JobOptions.validate(Map("thumbnails" -> "120x80")) ==
-      Right(JobOptions.Options(thumbnails = Some((120, 80)))))
+    assert(parse("thumbnails=120x80") ==
+      Right(Config(partitions = 7, thumbnails = Some((120, 80)))))
     Seq("120", "x", "120x", "x80", "0x80", "120x-1", "axb", "1x2x3").foreach { t =>
-      assert(JobOptions.validate(Map("thumbnails" -> t)) ==
+      assert(parse(s"thumbnails=$t") ==
         Left("Invalid 'size' value"), t)
     }
   }
 
   test("unknown keys and malformed args rejected") {
-    assert(JobOptions.validate(Map("via-allowed-users" -> "x")).isLeft)
-    assert(JobOptions.parseArgs(Seq("novalue")).isLeft)
-    assert(JobOptions.parseArgs(Seq("output-pdf-version=2", "thumbnails=8x8")) ==
-      Right(JobOptions.Options(outputPdfVersion = "2", thumbnails = Some((8, 8)))))
+    assert(parse("via-allowed-users=x").isLeft)
+    assert(parse("novalue").isLeft)
+    assert(parse("output-pdf-version=2", "thumbnails=8x8") ==
+      Right(Config(partitions = 7, outputPdfVersion = "2", thumbnails = Some((8, 8)))))
+  }
+
+  test("a repeated key is rejected, not resolved to its last value") {
+    assert(parse("output-pdf-version=1", "output-pdf-version=3") ==
+      Left("option 'output-pdf-version' given more than once"))
+    assert(parse("thumbnails=8x8", "conversion-format=text", "thumbnails=8x8").isLeft)
+  }
+
+  test("[partitions]: at most one positive integer, in any position") {
+    assert(parse("12") == Right(Config(partitions = 12)))
+    assert(parse("thumbnails=8x8", "12") ==
+      Right(Config(partitions = 12, thumbnails = Some((8, 8)))))
+    Seq("abc", "0", "-3", "2.5", "99999999999").foreach { p =>
+      assert(parse(p) == Left(s"partitions must be a positive integer: '$p'"), p)
+    }
+    assert(parse("4", "8").isLeft)
+    assert(parse("4", "conversion-format=text", "abc").isLeft)
+  }
+
+  test("the default partition count is read only when every check passed") {
+    var reads = 0
+    def counted = { reads += 1; 5 }
+    assert(JobOptions.parseExtract(Seq("thumbnails=0x0"), counted).isLeft)
+    assert(JobOptions.parseExtract(Seq("3"), counted) == Right(Config(partitions = 3)))
+    assert(reads == 0)
+    assert(JobOptions.parseExtract(Nil, counted) == Right(Config(partitions = 5)))
+    assert(reads == 1)
+  }
+
+  test("split: the one key=value contract, first violation wins") {
+    val keys = Set("a", "b")
+    assert(JobOptions.split(Seq("a=1", "b=x=y", "a-not"), keys) ==
+      Left("not a key=value option: 'a-not'"))
+    assert(JobOptions.split(Seq("a=1", "b=x=y"), keys) ==
+      Right(Map("a" -> "1", "b" -> "x=y")))
+    assert(JobOptions.split(Seq("a="), keys) == Right(Map("a" -> "")))
+    assert(JobOptions.split(Seq("c=1", "a=1", "a=2"), keys) ==
+      Left("unknown option 'c' (expected a=, b=)"))
+    assert(JobOptions.split(Seq("a=1", "a=2", "c=1"), keys) ==
+      Left("option 'a' given more than once"))
   }
 
   test("thumbnails option produces a sized artifact sidecar end-to-end") {

@@ -152,6 +152,48 @@ class SnapshotTableSpec extends AnyFunSuite {
     t.requireMetaConsistent("someOtherKey", "anything")
   }
 
+  test("manifest meta round-trips any string, and the meta guard sees it") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val t = new SnapshotTable(tmpDir())
+    val meta = Map(
+      "sourceRoot" -> "/data/run{1}/\"x\"\\y",
+      "options" -> "block=a}.test,{b\ncap=\"3\"\t\\",
+      "conversionFormat" -> "spans",
+      "z" -> "plain",
+      "{\"odd key\\}" -> "")
+    val id = t.commit(Seq(("a", 1L)).toDF("url", "v"), meta)
+    val m = t.readManifest(id)
+    assert(m.meta == meta)
+    assert(m.id == id && m.parentId == -1L && m.rowCount == 1L && m.files.nonEmpty)
+    val e = intercept[IllegalArgumentException] {
+      t.requireMetaConsistent("conversionFormat", "text", defaultForMissing = "spans")
+    }
+    assert(e.getMessage.contains("conversionFormat=spans"))
+  }
+
+  test("a manifest in the earlier hand-rolled on-disk format still reads") {
+    val t = new SnapshotTable(tmpDir())
+    val dir = Files.createDirectories(java.nio.file.Paths.get(t.root, "manifests"))
+    // byte-for-byte what the earlier writer produced: it escaped only `\`
+    // and `"`, so a newline in a value was written raw
+    Files.write(dir.resolve("snap-0.json"),
+      ("{\"id\": 0, \"parentId\": -1, \"rowCount\": 2,\n" +
+        " \"files\": [\"part-00000-a.parquet\", \"part-00001-b.parquet\"],\n" +
+        " \"meta\": {\"conversionFormat\": \"spans\", \"job\": \"extract\"}}").getBytes("UTF-8"))
+    Files.write(dir.resolve("snap-1.json"),
+      ("{\"id\": 1, \"parentId\": 0, \"rowCount\": 0,\n" +
+        " \"files\": [],\n" +
+        " \"meta\": {\"options\": \"a\nb\", \"path\": \"C:\\\\x \\\"q\\\"\"}}").getBytes("UTF-8"))
+    Files.write(java.nio.file.Paths.get(t.root, "CURRENT"), "1".getBytes("UTF-8"))
+    assert(t.readManifest(0L) == t.Manifest(0L, -1L,
+      Seq("part-00000-a.parquet", "part-00001-b.parquet"), 2L,
+      Map("conversionFormat" -> "spans", "job" -> "extract")))
+    assert(t.readManifest(1L) == t.Manifest(1L, 0L, Nil, 0L,
+      Map("options" -> "a\nb", "path" -> "C:\\x \"q\"")))
+    assert(t.snapshotChain == Seq(1L, 0L))
+  }
+
   test("sweepOrphans removes data dirs with no manifest (crashed commit)") {
     val spark = TestSpark.spark
     import spark.implicits._
