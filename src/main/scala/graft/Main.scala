@@ -72,7 +72,7 @@ object Main {
             cfg.thumbnails.foreach { case (w, h) =>
               println(s"[graft] thumbnails (${w}x$h) -> $outputRoot/_thumbnails/snap-$id")
             }
-            spark.read.parquet(s"$outputRoot/_counters/snap-$id")
+            new SnapshotTable(outputRoot).readSidecar(spark, "_counters", id).get
               .orderBy("status").collect()
               .foreach(r => println(s"[counters] ${r.getString(0)}: docs=${r.getLong(1)} bytes=${r.get(2)}"))
           }
@@ -124,17 +124,14 @@ object Main {
           println(s"[graft] stream drained; output now holds $n extracted rows")
         case "stream-curate" =>
           // streaming curation: extract + the curate hygiene chain per
-          // micro-batch (dedup/cap are per-batch; see startCurated docs)
+          // micro-batch, one snapshot commit each (see startCurated docs)
           val sOpts = orExit(CurateOptions.parse(args.drop(4).toSeq))
           val qc = graft.streaming.StreamingExtract.startCurated(
             spark, args(1), args(2), args(3), sOpts)
           qc.processAllAvailable()
           qc.stop()
-          // a drain with no input fires zero micro-batches -> no batch-*
-          // dirs exist; report 0 instead of dying on PATH_NOT_FOUND. (The
-          // probe is the read itself — a java.nio existence check would
-          // mis-handle URI-style paths the Spark writer resolves.)
-          val nc = countRowsOrZero(spark, s"${args(2)}/batch-*")
+          // a drain with no input commits nothing: 0 rows
+          val nc = new SnapshotTable(args(2)).read(spark).fold(0L)(_.count())
           println(s"[graft] stream drained; curated output now holds $nc rows")
       }
     } finally SparkSession.getDefaultSession.foreach(_.stop())
@@ -165,12 +162,11 @@ object Main {
     spark
   }
 
-  /** Row count of a parquet path, where "nothing was ever written there"
-    * (missing path / empty file-sink metadata, i.e. no inferable schema)
-    * is a legitimate 0, not a crash — the zero-batch streaming drain case.
-    * ONLY those two error conditions map to 0: any other AnalysisException
-    * (mixed schemas across batch dirs, genuine corruption) propagates —
-    * a silent "0 rows" must never mask a real read failure. */
+  /** Row count of `stream`'s output, where "nothing was ever written there"
+    * (missing path / empty file-sink metadata: no inferable schema) is a
+    * legitimate 0 — the zero-batch drain. ONLY those two errors map to 0;
+    * any other AnalysisException propagates: a silent "0 rows" must never
+    * mask a real read failure. */
   private def countRowsOrZero(spark: SparkSession, path: String): Long =
     try spark.read.parquet(path).count()
     catch {

@@ -21,7 +21,17 @@ case class CurateOptions(
     nearDedup: Option[Double] = None,
     decontaminatePath: Option[String] = None,
     holdout: Option[(Double, Double)] = None,
-    exciseWindow: Int = 0)
+    exciseWindow: Int = 0) {
+
+  /** The sorted `key=value` line [[CurateOptions.parse]] accepts back. */
+  def render: String = JobOptions.render(
+    "cap" -> Option.when(cap != 1000)(cap), "block" -> Option.when(block.nonEmpty)(block.mkString(",")),
+    "para-dedup" -> Option.when(paraMaxDocs != 0)(paraMaxDocs), "min-quality" -> minQuality,
+    "max-dup-word" -> maxDupWord, "max-top-bigram" -> maxTopBigram, "min-tokens" -> minTokens,
+    "near-dedup" -> nearDedup, "decontaminate" -> decontaminatePath,
+    "holdout" -> holdout.map { case (t, v) => s"$t,$v" },
+    "excise" -> Option.when(exciseWindow != 0)(exciseWindow))
+}
 
 object CurateOptions {
   val Keys: Set[String] = Set("cap", "block", "para-dedup", "min-quality",
@@ -487,7 +497,7 @@ object Curate {
           "job" -> "curate",
           "sourceRoot" -> outputRoot,
           "sourceSnapshot" -> id.toString,
-          "options" -> opts.toString) ++
+          "options" -> opts.render) ++
           metrics.counts.map { case (s, n) => s"stage.$s" -> n.toString })
       Result(id, curatedTable.readManifest(curatedId).rowCount,
         metrics.counts, curatedId)

@@ -260,7 +260,8 @@ object ExtractPipeline {
 
   /** End-to-end job with commit + idempotent resume: extract only urls not in
     * the committed output (read-through-cache analog, views.py:249-272),
-    * append a snapshot, write `_counters`/`_lineage` sidecars.
+    * append a snapshot with its `_counters`/`_lineage` (and optional
+    * `_thumbnails`) sidecars, all visible at once.
     * Returns the committed snapshot id, or -1 if nothing was left to do. */
   def runAndCommit(
       spark: SparkSession,
@@ -281,22 +282,16 @@ object ExtractPipeline {
         case "text" => extracted.toDF().drop("spans", "attachments")
         case _ => extracted.toDF()
       }
-      val id = table.commit(projected, Map(
-        "heuristicsVersion" -> Heuristics.Version,
-        "inputSnapshotId" -> cfg.inputSnapshotId.toString,
-        "conversionFormat" -> cfg.conversionFormat,
-        "outputPdfVersion" -> cfg.outputPdfVersion))
-      counters(extracted).write.mode("overwrite")
-        .parquet(s"$outputRoot/_counters/snap-$id")
-      lineage(extracted).write.mode("overwrite")
-        .parquet(s"$outputRoot/_lineage/snap-$id")
-      // thumbnail artifact fan-out (A21 analog): one WxH PNG per finished
-      // doc, from the SAME persisted extraction — no pipeline replay
-      cfg.thumbnails.foreach { case (w, h) =>
-        graft.ops.Thumbnails.generate(extracted, w, h).write.mode("overwrite")
-          .parquet(s"$outputRoot/_thumbnails/snap-$id")
-      }
-      id
+      table.commit(projected, Map(
+          "heuristicsVersion" -> Heuristics.Version,
+          "inputSnapshotId" -> cfg.inputSnapshotId.toString,
+          "conversionFormat" -> cfg.conversionFormat,
+          "outputPdfVersion" -> cfg.outputPdfVersion),
+        // every sidecar, incl. the thumbnail fan-out (A21 analog: one WxH PNG
+        // per finished doc), reads the SAME persisted extraction
+        sidecars = _ => Map("_counters" -> counters(extracted), "_lineage" -> lineage(extracted)) ++
+          cfg.thumbnails.map { case (w, h) =>
+            "_thumbnails" -> graft.ops.Thumbnails.generate(extracted, w, h) })
     } finally extracted.unpersist()
   }
 }

@@ -36,6 +36,11 @@ object JobOptions {
       parse(v).map(Some(_)).toRight(s"$key must be $rule: '$v'")
     }
 
+  /** A job's canonical options line (its manifest `options` meta): the
+    * keys given a value, i.e. not at their default, as sorted `key=value`. */
+  def render(kv: (String, Option[Any])*): String =
+    kv.sortBy(_._1).collect { case (k, Some(v)) => s"$k=$v" }.mkString(" ")
+
   /** The conversion formats the pipeline implements — the
     * CONVERTABLE_MIMETYPES["formats"] analog (config/config.yml:34-153).
     * "spans" = full rows; "text" = text-only projection. Accepting an

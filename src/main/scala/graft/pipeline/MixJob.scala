@@ -14,7 +14,15 @@ import graft.table.SnapshotTable
 case class MixOptions(
     sample: Map[String, Double] = Map.empty,
     sampleDefault: Double = 1.0,
-    budget: Option[Long] = None)
+    budget: Option[Long] = None) {
+
+  /** The sorted `key=value` line [[MixOptions.parse]] accepts back. */
+  def render: String = {
+    val groups = sample ++ Option.when(sampleDefault != 1.0)("default" -> sampleDefault)
+    JobOptions.render("budget" -> budget, "sample" -> Option.when(groups.nonEmpty)(
+      groups.toSeq.sorted.map { case (g, f) => s"$g:$f" }.mkString(",")))
+  }
+}
 
 object MixOptions {
   val Keys: Set[String] = Set("sample", "budget")
@@ -120,7 +128,7 @@ object MixJob {
           "job" -> "mix",
           "sourceRoot" -> curatedDir,
           "sourceSnapshot" -> id.toString,
-          "options" -> opts.toString))
+          "options" -> opts.render))
       Result(id, mixTable.readManifest(mixId).rowCount, mixId)
     }
   }

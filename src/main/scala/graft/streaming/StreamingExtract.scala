@@ -130,32 +130,21 @@ object StreamingExtract {
     * cannot window over data it has not seen; the url-dedup state store
     * still spans batches upstream), and global cross-batch dedup remains
     * a batch/compaction concern. The per-domain CAP, however, is enforced
-    * ACROSS batches: a tiny cumulative (domain, kept) counts table —
-    * snapshotted per batch under `_counts/batch-<id>` with the same
-    * atomic-rename protocol as the data — feeds
+    * ACROSS batches: the cumulative (domain, kept) counts, committed as
+    * each snapshot's `_counts` sidecar, feed
     * [[graft.pipeline.Curate.curate]]'s `priorDomainKept`, so each batch
-    * admits only the cap REMAINDER per domain and a domain exceeding the
-    * cap over many batches stops emitting, approximating the batch job's
-    * global cap (modulo arrival order: within a batch the earliest-crawl
-    * rule applies, across batches arrival order wins — a stream cannot
-    * reorder the past). foreachBatch runs batches sequentially, so
-    * read-prior/write-next is race-free; NOT mapGroupsWithState, because
-    * the cap decision needs the whole curate chain's SURVIVORS, which
-    * exist only inside the foreachBatch body. The narrow stages —
-    * blocklist, quality/repetition drops, PII redaction — are per-row and
-    * therefore identical to the batch job.
+    * admits only the cap REMAINDER per domain (within a batch the
+    * earliest-crawl rule applies, across batches arrival order wins — a
+    * stream cannot reorder the past). foreachBatch runs batches
+    * sequentially, so read-prior/write-next is race-free; NOT
+    * mapGroupsWithState, because the cap decision needs the whole curate
+    * chain's SURVIVORS. The per-row stages are identical to the batch job.
     *
-    * Sink protocol (the batch job's snapshot-commit discipline, scaled to
-    * micro-batches): each batch writes into a hidden `.tmp-batch-<id>-*`
-    * dir and ATOMICALLY RENAMES it to `batch-<id>` — a `batch-<id>` dir is
-    * either absent or complete, never half-written, and the `batch-*` read
-    * glob can never see partial output. A replayed batch (foreachBatch is
-    * at-least-once) finds its committed dir already present and skips the
-    * write (batch content is deterministic for a given checkpoint replay,
-    * so keep-first is keep-identical); a crash mid-write leaves only a
-    * hidden tmp dir the glob ignores. Dir renames are atomic on local
-    * filesystems and HDFS; on object stores pair this sink with their
-    * atomic-commit layer. */
+    * Sink: each micro-batch is one [[graft.table.SnapshotTable.commit]]
+    * into `outputDir` (meta `streamBatch`), so it reads, mixes, compacts
+    * and sweeps like every other table. A batch at or below the head's
+    * `streamBatch` is a replay (foreachBatch is at-least-once): it is
+    * drained, not committed. */
   def startCurated(
       spark: SparkSession,
       inputDir: String,
@@ -185,89 +174,35 @@ object StreamingExtract {
     }
     val src = pagesStream(spark, inputDir)
     val unique = dedupStream(src, urlDedup, watermark)
-    unique.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-        // Hadoop FileSystem, NOT java.nio: outputDir may be hdfs://s3a://
-        // etc. — java.nio would mangle URI paths the Spark writer
-        // resolves (Main.countRowsOrZero documents the same trap), and
-        // FileSystem.rename is the API with the atomic-dir-rename
-        // contract on HDFS (object stores still need their own commit
-        // layer — see the scaladoc)
-        val outRoot = new HPath(outputDir)
-        val fs: FileSystem =
-          outRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def writeAtomic(df: org.apache.spark.sql.DataFrame, dst: HPath): Unit = {
-          val tmp = new HPath(outRoot,
-            s".tmp-${dst.getName}-${java.util.UUID.randomUUID()}")
-          df.write.mode("overwrite").parquet(tmp.toString)
-          // Hadoop rename contract, handled precisely: (a) if dst already
-          // exists AND is a dir, rename moves tmp INSIDE it and returns
-          // true — that is a lost replay race (the winner's dir is
-          // complete and identical), so the nested copy is removed;
-          // (b) a false return is a REAL failure and must fail the batch
-          // loudly (swallowing it would commit nothing and let the prune
-          // below erase the only surviving counts snapshot) — unless a
-          // racer created dst in the meantime, which is again case (a).
-          if (fs.rename(tmp, dst)) {
-            val nested = new HPath(dst, tmp.getName)
-            if (fs.exists(nested)) fs.delete(nested, true)
-          } else {
-            fs.delete(tmp, true)
-            if (!fs.exists(dst))
-              throw new java.io.IOException(
-                s"atomic commit failed: rename $tmp -> $dst")
-          }
-        }
-        // cross-batch cap state: the latest committed cumulative
-        // (domain, kept) snapshot from an earlier batch
-        val countsRoot = new HPath(outRoot, "_counts")
-        def countIds(): Seq[Long] =
-          if (!fs.exists(countsRoot)) Nil
-          else fs.listStatus(countsRoot).toSeq.map(_.getPath.getName)
-            .collect { case n if n.startsWith("batch-") =>
-              n.stripPrefix("batch-").toLong }
-        val prior: Option[org.apache.spark.sql.DataFrame] =
-          countIds().filter(_ < batchId).sorted.lastOption.map(m =>
-            spark.read.parquet(new HPath(countsRoot, s"batch-$m").toString))
-        val committed = new HPath(outRoot, s"batch-$batchId")
-        if (!fs.exists(committed)) {
-          // the extracted batch is referenced from BOTH curate chains (the
-          // tapped output and the metadata cap-rank twin) — persist it for
-          // the batch's duration so extraction runs once per row, not
-          // twice; a micro-batch (maxFilesPerTrigger-bounded) is safe to
-          // cache at any corpus scale
-          val rows = extracted(batch, cfg)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try writeAtomic(
-            graft.pipeline.Curate.curate(rows, opts, benchGrams,
-              priorDomainKept = prior),
-            committed)
-          finally rows.unpersist()
-        }
-        // cumulative counts AFTER this batch, derived from the committed
-        // output (so a crash between the two writes replays correctly:
-        // output present + counts absent -> counts re-derived, identical)
-        val countsDst = new HPath(countsRoot, s"batch-$batchId")
-        if (!fs.exists(countsDst)) {
-          fs.mkdirs(countsRoot)
-          val batchKept = spark.read.parquet(committed.toString)
-            .groupBy(col("domain")).agg(count(lit(1)).as("kept"))
-          val cumulative = prior match {
-            case None => batchKept
-            case Some(p) => p.select(col("domain"), col("kept"))
-              .unionByName(batchKept)
-              .groupBy(col("domain")).agg(sum(col("kept")).as("kept"))
-          }
-          writeAtomic(cumulative, countsDst)
-        }
-        // prune superseded snapshots: only the LATEST counts dir is ever
-        // read again (foreachBatch replays at most the current batch), so
-        // a long-lived stream must not accumulate one dir per micro-batch
-        countIds().filter(_ < batchId)
-          .foreach(m => fs.delete(new HPath(countsRoot, s"batch-$m"), true))
-        ()
+    def keptPerDomain(df: DataFrame) = df.groupBy(col("domain")).agg(count(lit(1)).as("kept"))
+    def commitBatch(batch: DataFrame, batchId: Long): Unit = {
+      val table = new graft.table.SnapshotTable(outputDir)
+      val head = table.currentSnapshotId.map(table.readManifest)
+      if (head.flatMap(_.meta.get("streamBatch")).exists(_.toLong >= batchId))
+        // a replay still drains the batch: the url-dedup state stores must
+        // commit it (Spark fails a batch that left a state partition idle)
+        batch.write.format("noop").mode("overwrite").save()
+      else {
+        // cumulative counts as of the head: its `_counts` sidecar, or derived
+        // from the table once when compact or batch curate wrote the head
+        val prior = head.flatMap(h => table.readSidecar(spark, "_counts", h.id)
+          .orElse(table.read(spark).map(keptPerDomain)))
+        // the extracted batch is referenced from BOTH curate chains (the
+        // tapped output and the metadata cap-rank twin) — persist it for
+        // the batch's duration so extraction runs once per row, not
+        // twice; a micro-batch (maxFilesPerTrigger-bounded) is safe to
+        // cache at any corpus scale
+        val rows = extracted(batch, cfg).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try table.commit(graft.pipeline.Curate.curate(rows, opts, benchGrams, priorDomainKept = prior),
+            meta = Map("job" -> "stream-curate", "streamBatch" -> batchId.toString, "options" -> opts.render),
+            // the cumulative counts AFTER this batch, from its written rows
+            sidecars = written => Map("_counts" -> (prior.toSeq :+ keptPerDomain(written))
+              .reduce(_.unionByName(_)).groupBy(col("domain")).agg(sum(col("kept")).as("kept"))))
+        finally rows.unpersist()
       }
+    }
+    unique.writeStream
+      .foreachBatch(commitBatch _)
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .start()

@@ -16,16 +16,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout:
   * {{{
   *   <root>/data/snap-<id>/part-*.parquet     one dir per snapshot's appends
+  *   <root>/_<name>/snap-<id>/part-*.parquet  its sidecars (_counters, _counts, ...)
   *   <root>/manifests/snap-<id>.json          manifest (id, parent, files, meta)
   *   <root>/CURRENT                           latest committed snapshot id
   * }}}
   *
   * Commit protocol (analog of the reference's Redis result store becoming
   * queryable only when the RQ job completes, docsbox/docs/tasks.py:16-18):
-  * data files are invisible until the manifest is moved into place and
-  * CURRENT is atomically replaced; a crash mid-write leaves only orphan data
-  * dirs, which `sweepOrphans` collects (TTL cleaner analog,
-  * docsbox/cleaner/__init__.py:10-37).
+  * data files and sidecars are invisible until the manifest is moved into
+  * place and CURRENT is atomically replaced; a crash mid-write leaves only
+  * orphan dirs, which `sweepOrphans` collects (TTL cleaner analog,
+  * docsbox/cleaner/__init__.py:10-37). Every job commits through here.
   */
 final class SnapshotTable(val root: String) {
 
@@ -102,22 +103,28 @@ final class SnapshotTable(val root: String) {
       ids.result()
   }
 
-  /** Shared commit core: write `df` under snap-`id`, then manifest, then
-    * the atomic CURRENT swap — data is invisible until the swap; a crash
-    * at ANY point leaves the previous CURRENT fully readable (the debris
-    * is an orphan data dir / unreferenced manifest for the cleaner).
-    * `meta` is BY-NAME, evaluated AFTER the data write: lineage values
-    * observed during the write (per-stage curate counts) are complete by
-    * then. The manifest row count is captured DURING the write via
-    * `observe` — no re-read of the freshly-written output (a full extra
-    * scan at 100 TB). */
+  private def sidecarDir(name: String, id: Long): Path = Paths.get(root, name, s"snap-$id")
+
+  /** Shared commit core: write `df` under snap-`id`, then its sidecars,
+    * then manifest, then the atomic CURRENT swap — nothing is visible until
+    * the swap; a crash at ANY point leaves the previous CURRENT fully
+    * readable (debris: orphan dirs / an unreferenced manifest for the
+    * cleaner). `sidecars` gets the WRITTEN snapshot (read back by the known
+    * schema, no footer scan). `meta` is BY-NAME, evaluated AFTER the
+    * writes, when values observed during them (per-stage curate counts)
+    * are complete. The manifest row count is captured DURING the write via
+    * `observe` — no re-read of the output (a full extra scan at 100 TB). */
   private def writeAndSwap(df: DataFrame, id: Long, parentId: Long,
-      meta: => Map[String, String]): Long = {
+      meta: => Map[String, String], sidecars: DataFrame => Map[String, DataFrame]): Long = {
     val dir = dataDir(id)
     val obs = org.apache.spark.sql.Observation(s"graft-commit-$id")
     df.observe(obs, org.apache.spark.sql.functions.count(
       org.apache.spark.sql.functions.lit(1)).as("rows"))
       .write.mode("overwrite").parquet(dir.toString)
+    sidecars(df.sparkSession.read.schema(df.schema).parquet(dir.toString)).foreach {
+      case (name, frame) => require(SnapshotTable.isSidecar(name), s"not a sidecar: '$name'")
+        frame.write.mode("overwrite").parquet(sidecarDir(name, id).toString)
+    }
     val files = listDir(dir)
       .map(_.getFileName.toString).filter(_.endsWith(".parquet"))
     val rows = obs.get("rows").asInstanceOf[Long]
@@ -129,25 +136,27 @@ final class SnapshotTable(val root: String) {
     id
   }
 
-  /** Append `df` as a new snapshot; returns the committed snapshot id.
-    * Visible only after the atomic CURRENT replace. */
-  def commit(df: DataFrame, meta: => Map[String, String] = Map.empty): Long = {
+  /** Append `df` (and its `sidecars`) as a new snapshot; returns the
+    * committed snapshot id. Visible only after the atomic CURRENT replace. */
+  def commit(df: DataFrame, meta: => Map[String, String] = Map.empty,
+      sidecars: DataFrame => Map[String, DataFrame] = _ => Map.empty): Long = {
     val parent = currentSnapshotId.getOrElse(-1L)
-    writeAndSwap(df, parent + 1, parent, meta)
+    writeAndSwap(df, parent + 1, parent, meta, sidecars)
   }
 
   /** Commit `df` as a REPLACEMENT: the new snapshot becomes a fresh base
-    * (no parent) and the previous chain's manifests + data are swept AFTER
-    * the atomic CURRENT swap. For re-derived product tables — the curated
-    * output, where each job recomputes the WHOLE table rather than
-    * appending an increment (appending would union stale rows into every
-    * read). Same crash guarantee as [[commit]]: until the swap, readers
-    * see the previous table; a kill mid-write leaves orphans, never a
-    * half-replaced table. */
-  def commitReplace(df: DataFrame, meta: => Map[String, String] = Map.empty): Long = {
+    * (no parent) and the previous chain's manifests, data and sidecars are
+    * swept AFTER the atomic CURRENT swap. For re-derived product tables —
+    * the curated output, where each job recomputes the WHOLE table rather
+    * than appending an increment (appending would union stale rows into
+    * every read). Same crash guarantee as [[commit]]: until the swap,
+    * readers see the previous table; a kill mid-write leaves orphans,
+    * never a half-replaced table. */
+  def commitReplace(df: DataFrame, meta: => Map[String, String] = Map.empty,
+      sidecars: DataFrame => Map[String, DataFrame] = _ => Map.empty): Long = {
     val oldChain = snapshotChain
     val id = oldChain.headOption.getOrElse(-1L) + 1
-    writeAndSwap(df, id, -1L, meta)
+    writeAndSwap(df, id, -1L, meta, sidecars)
     oldChain.foreach(old => Files.deleteIfExists(manifestPath(old)))
     sweepOrphans()
     id
@@ -162,6 +171,11 @@ final class SnapshotTable(val root: String) {
     else Some(spark.read.parquet(dirs: _*))
   }
 
+  /** The `name` sidecar committed with snapshot `id`, if it has one. */
+  def readSidecar(spark: SparkSession, name: String, id: Long): Option[DataFrame] =
+    Option.when(Files.isDirectory(sidecarDir(name, id)))(
+      spark.read.parquet(sidecarDir(name, id).toString))
+
   /** Compact the snapshot chain: rewrite the table as-of CURRENT into one
     * fresh base snapshot, point CURRENT at it, and sweep the old chain's
     * data+manifests. This is the retention/expiry maintenance action (the
@@ -175,21 +189,22 @@ final class SnapshotTable(val root: String) {
     commitReplace(current, meta) // rewrite-as-of-CURRENT is a replacement
   }
 
-  /** Delete data dirs not referenced by any manifest in the CURRENT chain —
-    * debris of crashed commits (cleaner analog). Returns dirs removed. */
+  /** Delete data dirs and `_<name>/snap-<id>` sidecar dirs not in the
+    * CURRENT chain — debris of crashed commits and expired snapshots
+    * (cleaner analog); `_checkpoints` is never touched. Returns the dirs
+    * removed (`snap-<id>` for data). */
   def sweepOrphans(): Seq[String] = {
-    val dataRoot = Paths.get(root, "data")
-    if (!Files.exists(dataRoot)) return Nil
+    if (!Files.isDirectory(Paths.get(root))) return Nil
     val live = snapshotChain.map(id => s"snap-$id").toSet
-    val removed = Seq.newBuilder[String]
-    listDir(dataRoot).foreach { p =>
-      val name = p.getFileName.toString
-      if (!live.contains(name)) {
-        deleteRecursively(p)
-        removed += name
-      }
+    val dead = listDir(Paths.get(root)).map(_.getFileName.toString)
+      .filter(d => (d == "data" || SnapshotTable.isSidecar(d)) && Files.isDirectory(Paths.get(root, d)))
+      .sortBy(d => (d != "data", d))
+      .flatMap(d => listDir(Paths.get(root, d)).map(d -> _.getFileName.toString))
+      .filter { case (d, n) => !live(n) && (d == "data" || n.startsWith("snap-")) }
+    dead.map { case (d, n) =>
+      deleteRecursively(Paths.get(root, d, n))
+      if (d == "data") n else s"$d/$n"
     }
-    removed.result()
   }
 
   private def deleteRecursively(p: Path): Unit = {
@@ -205,4 +220,8 @@ object SnapshotTable {
     * raw newlines the earlier hand-rolled writer left in meta values. */
   private val Json = JsonMapper.builder()
     .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
+
+  /** `_` then word characters, but not the curate jobs' `_checkpoints`. */
+  private def isSidecar(name: String): Boolean =
+    name.matches("_\\w+") && name != "_checkpoints"
 }

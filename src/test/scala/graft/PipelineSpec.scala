@@ -271,6 +271,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(manifest.rowCount == res.get.kept)
     assert(manifest.meta("sourceSnapshot") == id.toString)
     assert(manifest.meta("job") == "curate")
+    assert(manifest.meta("options") == "block=example-3.test cap=10 para-dedup=2")
     assert(manifest.meta.contains("stage.finished"), manifest.meta)
     val cur = curTable.read(spark).get
     assert(cur.where(col("domain") === "example-3.test").count() == 0)
@@ -409,6 +410,12 @@ class PipelineSpec extends AnyFunSuite {
     // excise: a window must span >= 2 tokens; 0 = disabled
     assert(CurateOptions.parse(Seq("excise=1")).isLeft)
     assert(CurateOptions.parse(Seq("excise=0")).toOption.get.exciseWindow == 0)
+    // render is the canonical line parse accepts back, for every accepted case
+    assert(ok.render == "block=a.test,b.test cap=50 decontaminate=/tmp/bench excise=6 " +
+      "holdout=0.1,0.05 max-dup-word=0.5 max-top-bigram=0.18 min-quality=0.25 min-tokens=40 " +
+      "near-dedup=0.85 para-dedup=3")
+    Seq(ok, CurateOptions.parse(Nil).toOption.get, CurateOptions.parse(Seq("excise=0")).toOption.get)
+      .foreach(o => assert(CurateOptions.parse(o.render.split(' ').toSeq.filter(_.nonEmpty)) == Right(o)))
   }
 
   test("mix options: strict parse (sample entries, default, budget, no-op)") {
@@ -427,6 +434,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(MixOptions.parse(Seq("sample=en:0.5,en:0.2")).isLeft)  // dup group
     assert(MixOptions.parse(Seq("budget=5", "budget=9")).isLeft)  // dup key
     assert(MixOptions.parse(Seq("mixx=1")).isLeft)                // unknown
+    // render is the canonical line parse accepts back, for every accepted case
+    assert(ok.render == "budget=5000 sample=de:0.25,default:0.1,en:0.5")
+    Seq(ok, MixOptions.parse(Seq("sample=default:0.5")).toOption.get)
+      .foreach(o => assert(MixOptions.parse(o.render.split(' ').toSeq) == Right(o)))
   }
 
   test("mix job: sampling then per-lang budget keeps the earliest-crawl prefix") {
@@ -459,6 +470,7 @@ class PipelineSpec extends AnyFunSuite {
     val back = new graft.table.SnapshotTable(s"$dir/mix")
     assert(back.read(spark).get.count() == 2)
     assert(back.readManifest(r.mixSnapshotId).meta("job") == "mix")
+    assert(back.readManifest(r.mixSnapshotId).meta("options") == "budget=12 sample=aa:1.0,bb:0.0")
   }
 
   test("curate: excise cuts cross-doc repeated spans; untouched docs byte-identical") {

@@ -194,6 +194,35 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.snapshotChain == Seq(1L, 0L))
   }
 
+  test("sidecars commit with their snapshot: a failed sidecar publishes nothing") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val t = new SnapshotTable(tmpDir())
+    def path(parts: String*) = java.nio.file.Paths.get(t.root, parts: _*)
+    val perUrl = (df: org.apache.spark.sql.DataFrame) => Map("_x" -> df.groupBy("url").count())
+    t.commit(Seq(("a", 1L)).toDF("url", "v"), sidecars = perUrl)
+    val next = Seq(("b", 1L), ("c", 2L)).toDF("url", "v")
+    // the sidecar fails mid-write, after the data write succeeded
+    val boom = (df: org.apache.spark.sql.DataFrame) => Map("_x" -> df.select(col("url"),
+      when(col("v") < 2, col("v")).otherwise(raise_error(lit("mid-write failure")).cast("long"))))
+    intercept[Exception] { t.commit(next, sidecars = boom) }
+    assert(t.currentSnapshotId.contains(0L) && t.snapshotChain == Seq(0L))
+    assert(t.read(spark).get.collect().map(_.getString(0)).toSeq == Seq("a"))
+    assert(!Files.exists(path("_x", "snap-1")) ||
+      Files.walk(path("_x", "snap-1")).noneMatch(_.toString.endsWith(".parquet")))
+    // the cleaner takes the debris and names it; it never enters _checkpoints
+    Files.createDirectories(path("_x", "snap-99"))
+    Files.createDirectories(path("_checkpoints", "snap-7"))
+    val removed = t.sweepOrphans()
+    assert(removed.contains("snap-1") && removed.contains("_x/snap-99"), removed)
+    assert(!Files.exists(path("_x", "snap-99")) && !Files.exists(path("_x", "snap-1")))
+    assert(Files.exists(path("_checkpoints", "snap-7")) && Files.exists(path("_x", "snap-0")))
+    // a retry commits the same id, with its sidecar
+    assert(t.commit(next, sidecars = perUrl) == 1L && t.snapshotChain == Seq(1L, 0L))
+    assert(t.readSidecar(spark, "_x", 1L).get.collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("b", "c"))
+  }
+
   test("sweepOrphans removes data dirs with no manifest (crashed commit)") {
     val spark = TestSpark.spark
     import spark.implicits._

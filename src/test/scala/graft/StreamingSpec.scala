@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.CorpusWriter
 import graft.streaming.StreamingExtract
+import graft.table.SnapshotTable
 
 /** Structured Streaming extraction: micro-batch processing, exactly-once
   * resume from checkpoint, watermarked url dedup. */
@@ -90,20 +91,38 @@ class StreamingSpec extends AnyFunSuite {
       graft.pipeline.CurateOptions(cap = 1000, paraMaxDocs = 2,
         block = Seq("example-3.test")))
     q.processAllAvailable()
-    // second batch -> its own idempotent batch dir
+    // second batch -> its own snapshot
     CorpusWriter.pagesDs(spark, 240L, partitions = 1)
       .write.mode("append").parquet(in)
     q.processAllAvailable()
     q.stop()
-    val cur = spark.read.parquet(s"$out/batch-*")
+    val table = new SnapshotTable(out)
+    val cur = table.read(spark).get
     assert(cur.count() > 0)
     // the per-row hygiene stages hold exactly as in the batch job
     assert(cur.where(col("domain") === "example-3.test").count() == 0)
     assert(cur.where(col("text").rlike(graft.ops.TextStats.EmailPat)).count() == 0)
     assert(cur.columns.contains("warc_ts") && cur.columns.contains("n_emails"))
-    // cross-batch url dedup held: no url appears in two batch dirs
+    // cross-batch url dedup held: no url appears in two snapshots
     val urls = cur.select("url").collect().map(_.getString(0))
     assert(urls.length == urls.distinct.length)
+    assert(table.readManifest(table.currentSnapshotId.get).meta ==
+      Map("job" -> "stream-curate", "streamBatch" -> "1",
+        "options" -> "block=example-3.test para-dedup=2"))
+    // replay: the checkpoint loses its last commit entry, so the restarted
+    // query re-runs batch 1; the table already holds it and skips it
+    def countsOfHead = table.readSidecar(spark, "_counts", table.currentSnapshotId.get).get
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (rowsBefore, chainBefore, countsBefore) = (cur.count(), table.snapshotChain, countsOfHead)
+    Seq("1", ".1.crc").foreach(f => Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", f)))
+    val replay = StreamingExtract.startCurated(spark, in, out, ckpt,
+      graft.pipeline.CurateOptions(cap = 1000, paraMaxDocs = 2,
+        block = Seq("example-3.test")))
+    replay.processAllAvailable()
+    replay.stop()
+    assert(Files.exists(java.nio.file.Paths.get(ckpt, "commits", "1")), "batch 1 was re-run")
+    assert(table.read(spark).get.count() == rowsBefore)
+    assert(table.snapshotChain == chainBefore && countsOfHead == countsBefore)
   }
 
   test("streaming curate: per-domain cap holds ACROSS micro-batches") {
@@ -122,16 +141,18 @@ class StreamingSpec extends AnyFunSuite {
     val q = StreamingExtract.startCurated(spark, in, out, ckpt,
       graft.pipeline.CurateOptions(cap = 3))
     q.processAllAvailable()
-    val afterB1 = spark.read.parquet(s"$out/batch-*")
+    val table = new SnapshotTable(out)
+    val afterB1 = table.read(spark).get
       .groupBy("domain").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(afterB1.values.forall(_ <= 3), afterB1)
     pagesSlice(120, 360).write.mode("append").parquet(in)
     q.processAllAvailable()
     q.stop()
-    val perDomain = spark.read.parquet(s"$out/batch-*")
+    def perDomainNow = table.read(spark).get
       .groupBy("domain").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val perDomain = perDomainNow
     assert(perDomain.nonEmpty)
     perDomain.foreach { case (d, n) =>
       assert(n <= 3, s"domain $d exceeded the cross-batch cap: $n")
@@ -141,9 +162,29 @@ class StreamingSpec extends AnyFunSuite {
       assert(perDomain(d) == 3L, s"full domain $d grew: ${perDomain(d)}")
     }
     // the counts table snapshots are cumulative and atomic-committed
-    val counts = spark.read.parquet(s"$out/_counts/batch-1")
+    def countsOf(id: Long) = table.readSidecar(spark, "_counts", id).get
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val counts = countsOf(1L)
     assert(counts == perDomain, s"counts $counts != output $perDomain")
+    // compact drops the _counts sidecar; batch 3 (new rows, same domains)
+    // re-derives the counts from the table and the cap still holds
+    val compacted = table.compact(spark)
+    pagesSlice(360, 480).write.mode("append").parquet(in)
+    val q3 = StreamingExtract.startCurated(spark, in, out, ckpt,
+      graft.pipeline.CurateOptions(cap = 3))
+    q3.processAllAvailable()
+    q3.stop()
+    assert(table.snapshotChain == Seq(compacted + 1, compacted))
+    val afterB3 = perDomainNow
+    afterB3.foreach { case (d, n) =>
+      assert(n <= 3, s"domain $d exceeded the cap across compaction: $n")
+    }
+    perDomain.filter(_._2 == 3L).keys.foreach(d => assert(afterB3(d) == 3L, d))
+    assert(countsOf(compacted + 1) == afterB3)
+    // the stream-curated table is an ordinary snapshot table downstream
+    val mixDir = Files.createTempDirectory("graft-xcap-mix").toString
+    assert(graft.pipeline.MixJob.run(spark, out, mixDir,
+      graft.pipeline.MixOptions(sampleDefault = 0.5)).isDefined)
   }
 
   test("mapGroupsWithState: per-host running state accumulates across batches") {
