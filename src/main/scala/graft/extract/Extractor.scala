@@ -92,19 +92,20 @@ object Extractor {
 
   private def extractHtml(url: String, payload: Array[Byte]): Extracted = {
     val s = decode(payload)
-    val dom = HtmlParser.parse(s)
-    // primary heuristic, then one relaxed retry — the strictly-bounded
-    // escalation chain (OCR loop analog, tasks.py:130-138)
-    var res = Boilerplate.extract(dom, relaxed = false)
+    // segment once; the relaxed retry re-classifies the same blocks — the
+    // strictly-bounded escalation chain (OCR loop analog, tasks.py:130-138)
+    val blocks = Boilerplate.segment(HtmlParser.parse(s), s.length + 16)
+    var res = blocks.extract(relaxed = false)
     if (res.contentBlocks == 0 && res.totalWords > 10)
-      res = Boilerplate.extract(dom, relaxed = true)
+      res = blocks.extract(relaxed = true)
     if (res.contentBlocks == 0 && res.totalWords > 50) {
       // conversion produced nothing from a non-trivial page: the analog of
       // "It was not possible to convert the file" (tasks.py:137-138)
       return statusRow(url, Status.Failed, Sniffer.MimeHtml,
         "no main content detected")
     }
-    finish(url, Sniffer.MimeHtml, res.text, res.spans)
+    // the text is already UTF-8: no String, no re-encode
+    finishBytes(url, Sniffer.MimeHtml, res.bytes, res.spans)
   }
 
   /** Decode payload bytes to chars: meta-charset sniff (HEIC->PNG
@@ -126,27 +127,55 @@ object Extractor {
     else noBom.replace("\r\n", "\n").replace('\r', '\n')
   }
 
+  private val CharsetKey = ascii("charset=")
+
+  /** Recognized `charset=` values; anything else decodes as UTF-8. */
+  private val Charsets: Seq[(Array[Byte], Charset)] = {
+    val cp1252 =
+      try Charset.forName("windows-1252")
+      catch { case _: Throwable => StandardCharsets.ISO_8859_1 }
+    Seq("iso-8859-1" -> StandardCharsets.ISO_8859_1, "latin1" -> StandardCharsets.ISO_8859_1,
+      "windows-1252" -> cp1252, "cp1252" -> cp1252,
+      "us-ascii" -> StandardCharsets.US_ASCII, "ascii" -> StandardCharsets.US_ASCII)
+      .map { case (n, cs) => ascii(n) -> cs }
+  }
+
+  private def ascii(s: String): Array[Byte] = s.getBytes(StandardCharsets.US_ASCII)
+
+  /** The `charset=` value in the first 1 KB, matched ASCII
+    * case-insensitively in the bytes (Locale.ROOT semantics: a Turkish
+    * default locale must not turn `ISO` into `ıso`); UTF-8 when absent or
+    * unknown. */
   private def sniffCharset(payload: Array[Byte]): Charset = {
     val m = math.min(payload.length, 1024)
-    val head = new String(payload, 0, m, StandardCharsets.ISO_8859_1).toLowerCase
-    val i = head.indexOf("charset=")
-    if (i >= 0) {
-      var j = i + 8
-      if (j < head.length && (head.charAt(j) == '"' || head.charAt(j) == '\'')) j += 1
-      val st = j
-      while (j < head.length && {
-        val c = head.charAt(j)
-        (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '-' || c == '_'
-      }) j += 1
-      head.substring(st, j) match {
-        case "iso-8859-1" | "latin1" => StandardCharsets.ISO_8859_1
-        case "windows-1252" | "cp1252" =>
-          try Charset.forName("windows-1252")
-          catch { case _: Throwable => StandardCharsets.ISO_8859_1 }
-        case "us-ascii" | "ascii" => StandardCharsets.US_ASCII
-        case _ => StandardCharsets.UTF_8
-      }
-    } else StandardCharsets.UTF_8
+    val i = indexOfLower(payload, m, CharsetKey, 0)
+    if (i < 0) return StandardCharsets.UTF_8
+    var j = i + CharsetKey.length
+    if (j < m && (payload(j) == '"' || payload(j) == '\'')) j += 1
+    val st = j
+    while (j < m && {
+      val c = lowerAscii(payload(j))
+      (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9') || c == '-' || c == '_'
+    }) j += 1
+    Charsets.collectFirst {
+      case (name, cs) if name.length == j - st && indexOfLower(payload, j, name, st) == st => cs
+    }.getOrElse(StandardCharsets.UTF_8)
+  }
+
+  @inline private def lowerAscii(b: Byte): Int =
+    if (b >= 'A' && b <= 'Z') b + 32 else b & 0xff
+
+  /** First index >= from of the lowercase ASCII `key` in b[0, until),
+    * ASCII case-insensitively; -1 if none. */
+  private def indexOfLower(b: Array[Byte], until: Int, key: Array[Byte], from: Int): Int = {
+    var i = from
+    while (i <= until - key.length) {
+      var k = 0
+      while (k < key.length && lowerAscii(b(i + k)) == key(k)) k += 1
+      if (k == key.length) return i
+      i += 1
+    }
+    -1
   }
 
   // ----------------------------------------------------------------- PDF
@@ -191,8 +220,11 @@ object Extractor {
   }
 
   private def finish(url: String, mime: String, text: String, spans: Seq[Span],
+      attachments: Seq[Attachment] = Nil): Extracted =
+    finishBytes(url, mime, text.getBytes(StandardCharsets.UTF_8), spans, attachments)
+
+  private def finishBytes(url: String, mime: String, bytes: Array[Byte], spans: Seq[Span],
       attachments: Seq[Attachment] = Nil): Extracted = {
-    val bytes = text.getBytes(StandardCharsets.UTF_8)
     // post-extract invariants (conversion sanity check analog,
     // utils.py:394-407): span offsets within bounds and non-decreasing
     var ok = true

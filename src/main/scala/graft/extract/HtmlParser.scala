@@ -1,22 +1,34 @@
 package graft.extract
 
-import scala.collection.mutable.ArrayBuffer
-
-/** Lightweight DOM node. Text nodes are SLICES of the backing string
-  * (r7: entity-free text — the overwhelming majority, including skipped
-  * script/style bodies — used to be substring-copied into every node; the
-  * slice removes one full copy+allocation pass over all document text).
-  * `s` is either the parsed document or a decoded-entity string. */
+/** Lightweight DOM node. Text nodes are SLICES of the backing string: `s`
+  * is either the parsed document or a decoded-entity string, and the
+  * boilerplate walk reads the slice in place. */
 sealed trait Node
-final case class TextNode(s: String, from: Int, until: Int) extends Node {
-  /** Materialized text (tests/debug; the hot path reads the slice). */
-  def text: String = s.substring(from, until)
-}
+final case class TextNode(s: String, from: Int, until: Int) extends Node
 object TextNode {
   def apply(t: String): TextNode = TextNode(t, 0, t.length)
 }
-final class Elem(val tag: String, val attrs: List[(String, String)]) extends Node {
-  val children = new ArrayBuffer[Node](4)
+
+/** DOM element. `tag` is the lowercased name, the same interned String for
+  * every element of a known tag; `id` is its [[HtmlParser]] tag-table index
+  * (-1 for unknown tags and the root); `flags` are the tag's table flags
+  * plus the element's parse-time [[HtmlParser.BoilerHint]] bit. Attributes
+  * are not kept: the class/id/role hint is the only thing read from them. */
+final class Elem(val tag: String, val id: Int, val flags: Int) extends Node {
+  private var kids: Array[Node] = Elem.NoKids
+  private var n = 0
+
+  def childCount: Int = n
+  def child(i: Int): Node = kids(i)
+
+  private[extract] def add(c: Node): Unit = {
+    if (n == kids.length) kids = java.util.Arrays.copyOf(kids, if (n == 0) 4 else n * 2)
+    kids(n) = c
+    n += 1
+  }
+}
+object Elem {
+  private val NoKids = new Array[Node](0)
 }
 
 /** Streaming, never-throw HTML tokenizer + tree builder.
@@ -31,218 +43,374 @@ final class Elem(val tag: String, val attrs: List[(String, String)]) extends Nod
   * pathological document cannot hang an executor task (the 600 s job-timeout
   * analog, config/config.yml:7).
   *
-  * Determinism: output depends only on the input string — no locale, no
-  * hash-iteration order (attrs kept as an ordered List), no randomness.
+  * Lean DOM: every tag the parser or the boilerplate stage treats specially
+  * is in one static table (interned name + flag bits: void, raw-text,
+  * closes-`p`, implied-close set, block, boiler, skip, anchor, heading).
+  * Tag names are hashed and matched from the lowercased source chars, so a
+  * known tag costs no String; an unknown tag gets its lowercased String and
+  * zero flags. Attribute values are never materialized: a class/id/role
+  * value is matched against [[Boilerplate.BoilerHints]] in place and the
+  * result is kept as the element's [[BoilerHint]] bit.
+  *
+  * Determinism: output depends only on the input string — no locale (the
+  * hint match is `toLowerCase(Locale.ROOT)`-exact), no hash-iteration
+  * order, no randomness.
   */
 object HtmlParser {
 
-  val VoidTags: Set[String] = Set(
-    "area", "base", "br", "col", "embed", "hr", "img", "input", "link",
-    "meta", "param", "source", "track", "wbr")
-
-  /** Content is raw text until the matching close tag (no nested markup). */
-  val RawTextTags: Set[String] = Set("script", "style", "textarea", "noscript")
-
-  /** Start of any of these implicitly closes an open <p> (HTML5 rules). */
-  val ClosesP: Set[String] = Set(
-    "address", "article", "aside", "blockquote", "div", "dl", "fieldset",
-    "figure", "figcaption", "footer", "form", "h1", "h2", "h3", "h4", "h5",
-    "h6", "header", "hr", "main", "nav", "ol", "p", "pre", "section",
-    "table", "ul")
-
-  /** tag -> set of open tags it implicitly closes when it starts. */
-  val SelfClosing: Map[String, Set[String]] = Map(
-    "li" -> Set("li"),
-    "dt" -> Set("dt", "dd"),
-    "dd" -> Set("dt", "dd"),
-    "td" -> Set("td", "th"),
-    "th" -> Set("td", "th"),
-    "tr" -> Set("tr", "td", "th"),
-    "option" -> Set("option"))
-
   val MaxNodes = 1 << 20 // 1M nodes: bounded-work guard
   val MaxDepth = 256
+
+  // tag flags
+  final val Void = 1
+  final val RawText = 2
+  final val ClosesP = 4
+  final val Block = 8
+  final val Boiler = 16
+  final val Skip = 32
+  final val Anchor = 64
+  final val Heading = 128
+  /** Per element, set at parse time: a class/id/role value holds a hint. */
+  final val BoilerHint = 256
+  // implied end tags: a tag's own group bit (<< ImpliedShift) and the set
+  // of groups its start closes (<< ClosesShift)
+  private final val ImpliedShift = 16
+  private final val ClosesShift = 24
+  private final val GroupMask = 0x7f
+
+  /** tag -> open tags it implicitly closes when it starts (HTML5 rules). */
+  private val ImpliedClose: Map[String, Seq[String]] = Map(
+    "li" -> Seq("li"), "dt" -> Seq("dt", "dd"), "dd" -> Seq("dt", "dd"),
+    "td" -> Seq("td", "th"), "th" -> Seq("td", "th"),
+    "tr" -> Seq("tr", "td", "th"), "option" -> Seq("option"))
+  private val Groups = ImpliedClose.keys.toIndexedSeq
+
+  private val TagFlags: Seq[(Int, String)] = Seq(
+    Void -> "area base br col embed hr img input link meta param source track wbr",
+    // content is raw text until the matching close tag (no nested markup)
+    RawText -> "script style textarea noscript",
+    // start of any of these implicitly closes an open <p>
+    ClosesP -> ("address article aside blockquote div dl fieldset figure figcaption " +
+      "footer form h1 h2 h3 h4 h5 h6 header hr main nav ol p pre section table ul"),
+    // elements that delimit text blocks
+    Block -> ("p div h1 h2 h3 h4 h5 h6 li ul ol dl dt dd td th tr table thead tbody " +
+      "blockquote pre article section main figure figcaption nav header footer " +
+      "aside form fieldset address center body html"),
+    // structural boilerplate containers
+    Boiler -> "nav header footer aside form",
+    // subtrees the boilerplate walk skips entirely
+    Skip -> ("script style noscript textarea head title svg iframe select button " +
+      "object template"),
+    Anchor -> "a",
+    Heading -> "h1 h2 h3 h4 h5 h6",
+    // common inline tags: interned, no flags
+    0 -> "span b i em strong u s small code sub sup abbr cite q label time tfoot caption")
+
+  private val TableSize = 256
+  private val TableMask = TableSize - 1
+  private val Names = new Array[String](TableSize)
+  private val Flags = new Array[Int](TableSize)
+
+  /** Table slot of a name's `String.hashCode`, which the parser computes
+    * over the lowercased chars while it scans a tag name. */
+  private def slot(h: Int): Int = (h ^ (h >>> 7)) & TableMask
+
+  locally {
+    val flags = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    for ((f, names) <- TagFlags; n <- names.split(' ')) flags(n) = flags.getOrElse(n, 0) | f
+    for ((n, closes) <- ImpliedClose)
+      flags(n) = flags.getOrElse(n, 0) |
+        closes.map(c => 1 << Groups.indexOf(c)).reduce(_ | _) << ClosesShift
+    for ((n, g) <- Groups.zipWithIndex) flags(n) = flags(n) | (1 << g) << ImpliedShift
+    for ((n, f) <- flags) {
+      var k = slot(n.hashCode)
+      while (Names(k) != null) k = (k + 1) & TableMask
+      Names(k) = n.intern()
+      Flags(k) = f
+    }
+  }
+
+  private val P = Names(lookupName("p"))
+
+  /** Tag-table name of a known-tag id (see [[Elem.id]]). */
+  def tagName(id: Int): String = Names(id)
+
+  /** Tag-table flags of a known-tag id. */
+  def flagsOf(id: Int): Int = Flags(id)
+
+  /** Table id of a lowercase tag name, -1 when it is not a known tag. */
+  def lookupName(name: String): Int = lookup(name, 0, name.length, name.hashCode)
+
+  /** Table id of the tag whose name is s[from, until) lowercased (ASCII),
+    * given that name's hash; -1 when unknown. */
+  private def lookup(s: String, from: Int, until: Int, h: Int): Int = {
+    val n = until - from
+    var k = slot(h)
+    while (Names(k) != null) {
+      val name = Names(k)
+      if (name.length == n) {
+        var j = 0
+        while (j < n && lower(s.charAt(from + j)) == name.charAt(j)) j += 1
+        if (j == n) return k
+      }
+      k = (k + 1) & TableMask
+    }
+    -1
+  }
 
   private def isNameStart(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
   private def isNameChar(c: Char): Boolean =
     isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
-  private def lower(c: Char): Char =
+  @inline private def lower(c: Char): Char =
     if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+
+  /** `Character.isWhitespace`, answered without a table lookup outside
+    * [U+1680, U+3000], the only non-ASCII range that holds whitespace. */
+  private[extract] def isWhitespace(c: Char): Boolean =
+    if (c < 0x80) c == ' ' || (c >= '\t' && c <= '\r') || (c >= '\u001c' && c <= '\u001f')
+    else c >= '\u1680' && c <= '\u3000' && Character.isWhitespace(c)
+
+  private val Lt = TextNode("<")
 
   /** Parse HTML text into a tree rooted at a synthetic "#root" element.
     * Never throws; never returns null. */
   def parse(s: String): Elem = {
-    val root = new Elem("#root", Nil)
-    if (s == null || s.isEmpty) return root
-    val len = s.length
-    val stack = new ArrayBuffer[Elem](16)
-    stack += root
-    var nodes = 0
-    var i = 0
-
-    def top: Elem = stack(stack.length - 1)
-
-    def addText(t: String): Unit =
-      if (t.nonEmpty && nodes < MaxNodes) {
-        top.children += TextNode(t)
-        nodes += 1
-      }
-
-    /** Zero-copy text node over s[from, until). */
-    def addSlice(from: Int, until: Int): Unit =
-      if (until > from && nodes < MaxNodes) {
-        top.children += TextNode(s, from, until)
-        nodes += 1
-      }
-
-    def openTag(name: String, attrs: List[(String, String)], selfClose: Boolean): Unit = {
-      // implied end tags
-      if (ClosesP.contains(name)) {
-        if (top.tag == "p") stack.remove(stack.length - 1)
-      }
-      SelfClosing.get(name).foreach { closes =>
-        while (stack.length > 1 && closes.contains(top.tag))
-          stack.remove(stack.length - 1)
-      }
-      val e = new Elem(name, attrs)
-      if (nodes < MaxNodes) {
-        top.children += e
-        nodes += 1
-        if (!selfClose && !VoidTags.contains(name) && stack.length < MaxDepth)
-          stack += e
-      }
-    }
-
-    def closeTag(name: String): Unit = {
-      // pop to the matching open tag; ignore stray end tags entirely
-      var j = stack.length - 1
-      while (j >= 1 && stack(j).tag != name) j -= 1
-      if (j >= 1) stack.remove(j, stack.length - j)
-    }
-
-    while (i < len && nodes < MaxNodes) {
-      val c = s.charAt(i)
-      if (c == '<' && i + 1 < len) {
-        val c1 = s.charAt(i + 1)
-        if (c1 == '!') {
-          if (s.startsWith("<!--", i)) {
-            val end = s.indexOf("-->", i + 4)
-            i = if (end < 0) len else end + 3
-          } else { // doctype / CDATA / bogus declaration
-            val end = s.indexOf('>', i + 2)
-            i = if (end < 0) len else end + 1
-          }
-        } else if (c1 == '?') {
-          val end = s.indexOf('>', i + 2)
-          i = if (end < 0) len else end + 1
-        } else if (c1 == '/') {
-          var j = i + 2
-          val nb = new java.lang.StringBuilder(8)
-          while (j < len && isNameChar(s.charAt(j))) { nb.append(lower(s.charAt(j))); j += 1 }
-          val end = s.indexOf('>', j)
-          if (nb.length > 0 && end >= 0) {
-            closeTag(nb.toString)
-            i = end + 1
-          } else if (end >= 0) i = end + 1
-          else i = len
-        } else if (isNameStart(c1)) {
-          // start tag
-          var j = i + 1
-          val nb = new java.lang.StringBuilder(8)
-          while (j < len && isNameChar(s.charAt(j))) { nb.append(lower(s.charAt(j))); j += 1 }
-          val name = nb.toString
-          var attrs: List[(String, String)] = Nil
-          var selfClose = false
-          var done = false
-          while (!done && j < len) {
-            while (j < len && Character.isWhitespace(s.charAt(j))) j += 1
-            if (j >= len) done = true
-            else {
-              val cc = s.charAt(j)
-              if (cc == '>') { j += 1; done = true }
-              else if (cc == '/') {
-                j += 1
-                if (j < len && s.charAt(j) == '>') { j += 1; selfClose = true; done = true }
-              } else {
-                // attribute
-                val ab = new java.lang.StringBuilder(8)
-                while (j < len && { val x = s.charAt(j); x != '=' && x != '>' && x != '/' && !Character.isWhitespace(x) }) {
-                  ab.append(lower(s.charAt(j))); j += 1
-                }
-                var value = ""
-                while (j < len && Character.isWhitespace(s.charAt(j))) j += 1
-                if (j < len && s.charAt(j) == '=') {
-                  j += 1
-                  while (j < len && Character.isWhitespace(s.charAt(j))) j += 1
-                  if (j < len) {
-                    val q = s.charAt(j)
-                    if (q == '"' || q == '\'') {
-                      val end = s.indexOf(q, j + 1)
-                      if (end < 0) { value = s.substring(j + 1); j = len }
-                      else { value = s.substring(j + 1, end); j = end + 1 }
-                    } else {
-                      val st = j
-                      while (j < len && { val x = s.charAt(j); x != '>' && !Character.isWhitespace(x) }) j += 1
-                      value = s.substring(st, j)
-                    }
-                  }
-                }
-                if (ab.length > 0) attrs = (ab.toString -> value) :: attrs
-              }
-            }
-          }
-          i = j
-          openTag(name, attrs.reverse, selfClose)
-          if (!selfClose && RawTextTags.contains(name)) {
-            // consume raw text until the matching close tag (case-insensitive)
-            val closeIdx = indexOfIgnoreCase(s, "</" + name, i)
-            val contentEnd = if (closeIdx < 0) len else closeIdx
-            addSlice(i, contentEnd)
-            if (closeIdx < 0) i = len
-            else {
-              val gt = s.indexOf('>', closeIdx)
-              i = if (gt < 0) len else gt + 1
-            }
-            closeTag(name)
-          }
-        } else {
-          // '<' followed by junk: literal text
-          addText("<")
-          i += 1
-        }
-      } else if (c == '<') { // trailing '<' at end of input
-        addText("<")
-        i += 1
-      } else {
-        val next = s.indexOf('<', i)
-        val end = if (next < 0) len else next
-        // entity-free text (the common case) becomes a zero-copy slice
-        val dec = Entities.decodeOrNull(s, i, end)
-        if (dec == null) addSlice(i, end) else addText(dec)
-        i = end
-      }
-    }
-    // leftover past the node cap is appended raw so no bytes are lost
-    if (i < len) root.children += TextNode(s, i, len)
+    val root = new Elem("#root", -1, 0)
+    if (s != null && !s.isEmpty) new Parser(s, root).run()
     root
   }
 
-  private def indexOfIgnoreCase(s: String, needle: String, from: Int): Int = {
-    val n = needle.length
-    val max = s.length - n
-    var i = math.max(from, 0)
-    while (i <= max) {
-      var j = 0
-      var ok = true
-      while (ok && j < n) {
-        if (lower(s.charAt(i + j)) != lower(needle.charAt(j))) ok = false
-        j += 1
+  private final class Parser(s: String, root: Elem) {
+    private val len = s.length
+    private var stack = new Array[Elem](32)
+    private var depth = 1
+    private var nodes = 0
+    private var hintBuf = new Array[Char](32)
+    stack(0) = root
+
+    @inline private def top: Elem = stack(depth - 1)
+
+    private def addText(t: TextNode): Unit =
+      if (t.until > t.from && nodes < MaxNodes) {
+        top.add(t)
+        nodes += 1
       }
-      if (ok) return i
-      i += 1
+
+    private def pop(to: Int): Unit = {
+      while (depth > to) { depth -= 1; stack(depth) = null }
     }
-    -1
+
+    private def openTag(name: String, id: Int, flags: Int, selfClose: Boolean): Unit = {
+      // implied end tags
+      if ((flags & ClosesP) != 0 && (top.tag eq P)) pop(depth - 1)
+      val closes = (flags >>> ClosesShift) & GroupMask
+      if (closes != 0)
+        while (depth > 1 && ((top.flags >>> ImpliedShift) & closes) != 0) pop(depth - 1)
+      if (nodes < MaxNodes) {
+        val e = new Elem(name, id, flags)
+        top.add(e)
+        nodes += 1
+        if (!selfClose && (flags & Void) == 0 && depth < MaxDepth) {
+          if (depth == stack.length) stack = java.util.Arrays.copyOf(stack, depth * 2)
+          stack(depth) = e
+          depth += 1
+        }
+      }
+    }
+
+    /** Pop to the matching open tag; stray end tags are ignored. */
+    private def closeTag(name: String): Unit = {
+      var j = depth - 1
+      while (j >= 1 && stack(j).tag != name) j -= 1
+      if (j >= 1) pop(j)
+    }
+
+    /** The interned name of known tag `id`, else s[from, until) lowercased. */
+    private def nameOf(from: Int, until: Int, id: Int): String =
+      if (id >= 0) Names(id)
+      else {
+        val cs = new Array[Char](until - from)
+        var j = 0
+        while (j < cs.length) { cs(j) = lower(s.charAt(from + j)); j += 1 }
+        new String(cs)
+      }
+
+    def run(): Unit = {
+      var i = 0
+      while (i < len && nodes < MaxNodes) {
+        val c = s.charAt(i)
+        if (c == '<' && i + 1 < len) {
+          val c1 = s.charAt(i + 1)
+          if (c1 == '!') {
+            if (s.startsWith("<!--", i)) {
+              val end = s.indexOf("-->", i + 4)
+              i = if (end < 0) len else end + 3
+            } else { // doctype / CDATA / bogus declaration
+              val end = s.indexOf('>', i + 2)
+              i = if (end < 0) len else end + 1
+            }
+          } else if (c1 == '?') {
+            val end = s.indexOf('>', i + 2)
+            i = if (end < 0) len else end + 1
+          } else if (c1 == '/') {
+            var j = i + 2
+            var h = 0
+            while (j < len && isNameChar(s.charAt(j))) { h = 31 * h + lower(s.charAt(j)); j += 1 }
+            val end = s.indexOf('>', j)
+            if (j > i + 2 && end >= 0) {
+              closeTag(nameOf(i + 2, j, lookup(s, i + 2, j, h)))
+              i = end + 1
+            } else if (end >= 0) i = end + 1
+            else i = len
+          } else if (isNameStart(c1)) i = startTag(i)
+          else { // '<' followed by junk: literal text
+            addText(Lt)
+            i += 1
+          }
+        } else if (c == '<') { // trailing '<' at end of input
+          addText(Lt)
+          i += 1
+        } else {
+          val next = s.indexOf('<', i)
+          val end = if (next < 0) len else next
+          // entity-free text (the common case) is a zero-copy slice
+          val dec = Entities.decodeOrNull(s, i, end)
+          addText(if (dec == null) TextNode(s, i, end) else TextNode(dec))
+          i = end
+        }
+      }
+      // leftover past the node cap is appended raw so no bytes are lost
+      if (i < len) root.add(TextNode(s, i, len))
+    }
+
+    /** Start tag at s(i) == '<'; returns the index after it (and after the
+      * raw text of a script/style/textarea/noscript element). */
+    private def startTag(i: Int): Int = {
+      var j = i + 1
+      var h = 0
+      while (j < len && isNameChar(s.charAt(j))) { h = 31 * h + lower(s.charAt(j)); j += 1 }
+      val id = lookup(s, i + 1, j, h)
+      val name = nameOf(i + 1, j, id)
+      var flags = if (id >= 0) Flags(id) else 0
+      var selfClose = false
+      var done = false
+      while (!done && j < len) {
+        while (j < len && isWhitespace(s.charAt(j))) j += 1
+        if (j >= len) done = true
+        else {
+          val cc = s.charAt(j)
+          if (cc == '>') { j += 1; done = true }
+          else if (cc == '/') {
+            j += 1
+            if (j < len && s.charAt(j) == '>') { j += 1; selfClose = true; done = true }
+          } else {
+            // attribute: only a class/id/role value is looked at
+            val an = j
+            while (j < len && { val x = s.charAt(j); x != '=' && x != '>' && x != '/' && !isWhitespace(x) }) j += 1
+            val hinted = isHintAttr(an, j)
+            while (j < len && isWhitespace(s.charAt(j))) j += 1
+            if (j < len && s.charAt(j) == '=') {
+              j += 1
+              while (j < len && isWhitespace(s.charAt(j))) j += 1
+              if (j < len) {
+                val q = s.charAt(j)
+                val vs = if (q == '"' || q == '\'') j + 1 else j
+                val ve =
+                  if (q == '"' || q == '\'') {
+                    val end = s.indexOf(q, j + 1)
+                    j = if (end < 0) len else end + 1
+                    if (end < 0) len else end
+                  } else {
+                    while (j < len && { val x = s.charAt(j); x != '>' && !isWhitespace(x) }) j += 1
+                    j
+                  }
+                if (hinted && (flags & BoilerHint) == 0 && hasHint(vs, ve)) flags |= BoilerHint
+              }
+            }
+          }
+        }
+      }
+      openTag(name, id, flags, selfClose)
+      if (selfClose || (flags & RawText) == 0) j
+      else {
+        // consume raw text until the matching close tag (case-insensitive)
+        val closeIdx = indexOfCloseTag(name, j)
+        val contentEnd = if (closeIdx < 0) len else closeIdx
+        addText(TextNode(s, j, contentEnd))
+        val next =
+          if (closeIdx < 0) len
+          else {
+            val gt = s.indexOf('>', closeIdx)
+            if (gt < 0) len else gt + 1
+          }
+        closeTag(name)
+        next
+      }
+    }
+
+    /** s[from, until) is `class`, `id` or `role`, ASCII case-insensitive. */
+    private def isHintAttr(from: Int, until: Int): Boolean = {
+      val n = until - from
+      (n == 5 && matchesLower(from, "class")) || (n == 2 && matchesLower(from, "id")) ||
+        (n == 4 && matchesLower(from, "role"))
+    }
+
+    private def matchesLower(from: Int, word: String): Boolean = {
+      var k = 0
+      while (k < word.length && lower(s.charAt(from + k)) == word.charAt(k)) k += 1
+      k == word.length
+    }
+
+    /** `s.substring(from, until).toLowerCase(Locale.ROOT)` contains one of
+      * the hints — without the copies. The hints are ASCII, so only the
+      * chars whose lowercase form is ASCII can take part in a match: ASCII
+      * letters, U+212A KELVIN SIGN (-> `k`) and U+0130 (-> `i` + U+0307);
+      * every other char is kept as is and can only break a match. */
+    private def hasHint(from: Int, until: Int): Boolean = {
+      if (hintBuf.length < 2 * (until - from)) hintBuf = new Array[Char](2 * (until - from))
+      val b = hintBuf
+      var n = 0
+      var k = from
+      while (k < until) {
+        val c = s.charAt(k)
+        if (c == '\u212a') b(n) = 'k'
+        else if (c == '\u0130') { b(n) = 'i'; n += 1; b(n) = '\u0307' }
+        else b(n) = lower(c)
+        n += 1
+        k += 1
+      }
+      val hints = Boilerplate.BoilerHints
+      var h = 0
+      while (h < hints.length) {
+        if (containsAt(b, n, hints(h))) return true
+        h += 1
+      }
+      false
+    }
+
+    private def containsAt(b: Array[Char], n: Int, w: String): Boolean = {
+      val m = w.length
+      var p = 0
+      while (p <= n - m) {
+        var k = 0
+        while (k < m && b(p + k) == w.charAt(k)) k += 1
+        if (k == m) return true
+        p += 1
+      }
+      false
+    }
+
+    /** First index >= from of `</name` (ASCII case-insensitive), or -1. */
+    private def indexOfCloseTag(name: String, from: Int): Int = {
+      val max = len - name.length - 2
+      var p = s.indexOf('<', from)
+      while (p >= 0 && p <= max) {
+        if (s.charAt(p + 1) == '/' && matchesLower(p + 2, name)) return p
+        p = s.indexOf('<', p + 1)
+      }
+      -1
+    }
   }
 }
 

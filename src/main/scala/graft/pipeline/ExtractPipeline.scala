@@ -3,7 +3,7 @@ package graft.pipeline
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -59,6 +59,11 @@ import graft.table.SnapshotTable
   *    hash-partitioned on url, so only the committed side moves).
   */
 object ExtractPipeline {
+
+  // derived once per JVM, not per `run`: one ExpressionEncoder derivation
+  // takes 10-15 ms of planning time
+  private implicit val rawDocEncoder: Encoder[RawDoc] = Encoders.product[RawDoc]
+  private implicit val extractedRowEncoder: Encoder[ExtractedRow] = Encoders.product[ExtractedRow]
 
   case class Config(
       /** Width of the giant branch's round-robin exchange, and nothing
@@ -145,7 +150,6 @@ object ExtractPipeline {
 
   /** The typed map stage over [[extractPartition]]. */
   def extractStage(docs: Dataset[RawDoc], cfg: Config): Dataset[ExtractedRow] = {
-    import docs.sparkSession.implicits._
     docs.mapPartitions(extractPartition(cfg.inputSnapshotId))
   }
 
@@ -187,7 +191,6 @@ object ExtractPipeline {
     * collected or broadcast, so the plan survives 10^12 docs where the
     * round-1 giant-url broadcast (1% of urls >> broadcast limit) breaks. */
   private def planInput(pages: DataFrame, cfg: Config, done: Option[DataFrame]): Dataset[RawDoc] = {
-    import pages.sparkSession.implicits._
     val narrow = pages.where(validUrl).select(col("url"), col("warc_ts"), col("html"))
     if (cfg.assumeColocated)
       minusDone(narrow.as[RawDoc].mapPartitions(latestPerUrl).toDF(), done).as[RawDoc]
@@ -234,7 +237,6 @@ object ExtractPipeline {
       out: Dataset[ExtractedRow], cfg: Config): Dataset[ExtractedRow] = {
     if (cfg.outputPdfVersion == "3") out
     else {
-      import out.sparkSession.implicits._
       out.toDF()
         .withColumn("attachments",
           graft.ops.Attachments.applyPolicy(col("attachments"), cfg.outputPdfVersion))

@@ -182,11 +182,15 @@ final class SnapshotTable(val root: String) {
     * reference's TTL cleaner analog, docsbox/cleaner/__init__.py:10-37,
     * RESULT_FILE_TTL config.yml:8): history older than the compacted base
     * is gone; readers always see a consistent CURRENT (the swap is the
-    * same atomic rename as a commit). Returns the new snapshot id. */
+    * same atomic rename as a commit). The new base carries the head
+    * manifest's meta (`conversionFormat`, `streamBatch`, ...), overridden
+    * by `meta`, so the chain's guards survive compaction. Returns the new
+    * snapshot id. */
   def compact(spark: SparkSession, meta: Map[String, String] = Map.empty): Long = {
     val current = read(spark).getOrElse(
       throw new IllegalStateException("nothing committed; cannot compact"))
-    commitReplace(current, meta) // rewrite-as-of-CURRENT is a replacement
+    val headMeta = currentSnapshotId.fold(Map.empty[String, String])(readManifest(_).meta)
+    commitReplace(current, headMeta ++ meta) // rewrite-as-of-CURRENT is a replacement
   }
 
   /** Delete data dirs and `_<name>/snap-<id>` sidecar dirs not in the

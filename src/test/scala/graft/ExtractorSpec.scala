@@ -63,6 +63,27 @@ class ExtractorSpec extends AnyFunSuite {
     assert(!text.contains("CopyrightFooterText"))
   }
 
+  test("extraction does not depend on the default locale (tr_TR probe)") {
+    // a Turkish default locale lowercases 'I' to dotless U+0131: the charset
+    // sniff and the class hint must both match with Locale.ROOT semantics
+    val html = "<html><head><meta charset=\"ISO-8859-1\"></head><body>" +
+      "<div class=\"SIDEBAR\"><p>Sidebar links and other navigation things that are not " +
+      "the main content</p></div><p>Caf\u00e9 na\u00efve fa\u00e7ade \u00fcber: the main " +
+      "paragraph carries enough words for the classifier to keep it.</p></body></html>"
+    val bytes = html.getBytes(StandardCharsets.ISO_8859_1)
+    val saved = java.util.Locale.getDefault
+    def under(l: java.util.Locale) =
+      try { java.util.Locale.setDefault(l); Extractor.extract("probe", bytes) }
+      finally java.util.Locale.setDefault(saved)
+    val us = under(java.util.Locale.US)
+    val tr = under(new java.util.Locale("tr", "TR"))
+    val text = new String(us.text, StandardCharsets.UTF_8)
+    assert(text == "Caf\u00e9 na\u00efve fa\u00e7ade \u00fcber: the main paragraph carries " +
+      "enough words for the classifier to keep it.")
+    assert(us.text.length == 98)
+    assert(java.util.Arrays.equals(tr.text, us.text) && tr.spans == us.spans && tr.status == us.status)
+  }
+
   test("entities decode; unknown entities pass through") {
     val html = "<html><body><p>A &amp; B &lt;tag&gt; &#65; &#x42; &auml; &bogus; done " +
       "plus more words to satisfy the content classifier threshold rules here</p></body></html>"

@@ -95,6 +95,42 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(t.read(spark).get.count() == 5)
   }
 
+  test("compact keeps the head's meta: a text-format chain stays text-only") {
+    val spark = TestSpark.spark
+    val root = tmpDir()
+    val pages = CorpusWriter.pagesDs(spark, 60L, partitions = 2)
+    val text = ExtractPipeline.Config(partitions = 2, conversionFormat = "text")
+    val half = pages.where(pmod(xxhash64(col("url")), lit(2)) === 0)
+    assert(ExtractPipeline.runAndCommit(spark, half, root, text) == 0L)
+    val t = new SnapshotTable(root)
+    val id = t.compact(spark, Map("compactedBy" -> "test"))
+    val meta = t.readManifest(id).meta
+    assert(meta("conversionFormat") == "text" && meta("compactedBy") == "test")
+    // a default-format (spans) extract must still be refused ...
+    val e = intercept[IllegalArgumentException] {
+      ExtractPipeline.runAndCommit(spark, pages, root, ExtractPipeline.Config(partitions = 2))
+    }
+    assert(e.getMessage.contains("conversionFormat=text"))
+    // ... and a further text-format extract appends the rest
+    assert(ExtractPipeline.runAndCommit(spark, pages, root, text) == id + 1)
+    assert(t.read(spark).get.select("url").distinct().count() ==
+      ExtractPipeline.dedupLatest(pages).count())
+  }
+
+  test("compact of a stream-curated table keeps streamBatch on the head") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val t = new SnapshotTable(tmpDir())
+    // the meta stream-curate commits each micro-batch with
+    Seq(0, 1, 2).foreach { b =>
+      t.commit(Seq((s"u$b", b.toLong)).toDF("url", "v"),
+        Map("job" -> "stream-curate", "streamBatch" -> b.toString, "options" -> "cap=3"))
+    }
+    val id = t.compact(spark)
+    assert(t.readManifest(id).meta ==
+      Map("job" -> "stream-curate", "streamBatch" -> "2", "options" -> "cap=3"))
+  }
+
   test("commitReplace swaps the whole table atomically; failure keeps the old one") {
     val spark = TestSpark.spark
     import spark.implicits._

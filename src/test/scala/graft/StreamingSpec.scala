@@ -168,7 +168,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(counts == perDomain, s"counts $counts != output $perDomain")
     // compact drops the _counts sidecar; batch 3 (new rows, same domains)
     // re-derives the counts from the table and the cap still holds
+    val headBatch = table.readManifest(table.currentSnapshotId.get).meta("streamBatch")
     val compacted = table.compact(spark)
+    // the new base keeps the chain's replay guard
+    assert(table.readManifest(compacted).meta.get("streamBatch").contains(headBatch))
     pagesSlice(360, 480).write.mode("append").parquet(in)
     val q3 = StreamingExtract.startCurated(spark, in, out, ckpt,
       graft.pipeline.CurateOptions(cap = 3))
